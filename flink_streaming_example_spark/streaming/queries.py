@@ -35,6 +35,16 @@ from flink_streaming_example_spark.functions.stable import (
     stable_sum,
 )
 from flink_streaming_example_spark.plans.registry import register
+from flink_streaming_example_spark.streaming.keyed import (
+    Kernel,
+    carry_lookup,
+    group_index,
+    int_state,
+    keyed_state,
+    merge_carry,
+    per_user,
+    seg_last_flag_pos,
+)
 from flink_streaming_example_spark.operators.windows import (
     _OHLC_ORACLE,
     _SESSION_DYN_ORACLE,
@@ -482,8 +492,8 @@ GROUP BY user_id, win_id
 
 def count_windows_stream(ev: DataFrame, flush_after_ms: int) -> DataFrame:
     """Keyed count windows (every 5 events per key) over a watermarked
-    event stream — a per-key counter in applyInPandasWithState keyed
-    state, full windows emitted as their 5th event arrives.
+    event stream — a per-key counter in keyed state (streaming/keyed.py),
+    full windows emitted as their 5th event arrives.
 
     ``flush_after_ms``: epoch-ms the trailing-partial flush timer aims
     at — must lie strictly between the last data batch's watermark and
@@ -508,9 +518,6 @@ def count_windows_stream(ev: DataFrame, flush_after_ms: int) -> DataFrame:
     by-watermark limit Flink's onTimer has at watermark granularity."""
     import decimal
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     window_n = 5
     q6 = decimal.Decimal("0.000001")
     q2 = decimal.Decimal("0.01")
@@ -524,73 +531,43 @@ def count_windows_stream(ev: DataFrame, flush_after_ms: int) -> DataFrame:
             q6, rounding=decimal.ROUND_HALF_UP
         )
 
-    def emit(user_id, win_id, n, dsum: decimal.Decimal) -> dict:
-        return {
-            "user_id": user_id,
-            "win_id": win_id,
-            "n_events": n,
-            "sum_value": float(
-                dsum.quantize(q2, rounding=decimal.ROUND_HALF_UP)
-            ),
-        }
-
-    def count_windows(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            n_seen, part_n, part_sum = state.get
-            out = []
-            if part_n > 0:
-                out.append(
-                    emit(
-                        user_id,
-                        (n_seen - part_n) // window_n,
-                        part_n,
-                        decimal.Decimal(part_sum),
-                    )
-                )
-            state.remove()
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "win_id", "n_events", "sum_value"],
-            )
-            return
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        n_seen, part_n, part_sum = (
-            state.get if state.exists else (0, 0, "0")
+    def emit(user_id, win_id, n, dsum: decimal.Decimal) -> tuple:
+        return (
+            user_id,
+            win_id,
+            n,
+            float(dsum.quantize(q2, rounding=decimal.ROUND_HALF_UP)),
         )
+
+    def count(user_id, prev, rows, wm):
+        n_seen, part_n, part_sum = prev or (0, 0, "0")
         acc = decimal.Decimal(part_sum)
         out = []
-        for v in pdf["value"]:
-            acc += dec6(float(v))
+        for v in rows["value"]:
+            acc += dec6(v)
             n_seen += 1
             part_n += 1
             if part_n == window_n:
-                out.append(
-                    emit(user_id, (n_seen - 1) // window_n, part_n, acc)
-                )
+                out.append(emit(user_id, (n_seen - 1) // window_n, part_n, acc))
                 part_n, acc = 0, decimal.Decimal(0)
-        state.update((n_seen, part_n, str(acc)))
         # Aim at end-of-input (see docstring); the max() guard keeps
         # the call valid (must exceed the current watermark) even if a
         # degenerate replay puts nearly all event time in one batch.
-        state.setTimeoutTimestamp(
-            max(flush_after_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            out, columns=["user_id", "win_id", "n_events", "sum_value"]
-        )
+        return (n_seen, part_n, str(acc)), out, max(flush_after_ms, wm + 1)
 
-    ev = ev.withWatermark("ts", "0 seconds").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        count_windows,
-        outputStructType=(
-            "user_id long, win_id long, n_events long, sum_value double"
-        ),
-        stateStructType="n_seen long, part_n long, part_sum string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def flush(user_id, st):
+        n_seen, part_n, part_sum = st
+        if not part_n:
+            return []
+        win_id = (n_seen - part_n) // window_n
+        return [emit(user_id, win_id, part_n, decimal.Decimal(part_sum))]
+
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "value"),
+        per_user(count, "n_seen long, part_n long, part_sum string", flush),
+        output="user_id long, win_id long, n_events long, sum_value double",
+        order=("ts", "event_id"),
+        event_time="ts",
     )
 
 
@@ -860,56 +837,50 @@ WHERE last_seen + INTERVAL 12 HOURS < (SELECT max(CAST(ts AS TIMESTAMP))
 """
 
 
+def inactivity_stream(ev: DataFrame) -> DataFrame:
+    """The timer kernel behind q_inactivity_alert: per user, state is
+    the last-seen µs and an event-time timer 12 h past it.  Input: a
+    streaming frame with (user_id, ts)."""
+    timeout_ms = 12 * 3600 * 1000
+
+    def seen(user_id, prev, rows, wm):
+        max_us = max(rows["ts"])
+        if prev is None or max_us > prev[0]:
+            return (max_us,), [], max_us // 1000 + timeout_ms
+        # a batch that does not advance last-seen leaves the key with
+        # no timer, exactly as a per-key function that does not re-arm
+        return prev, [], None
+
+    def alert(user_id, st):
+        return [(user_id, st[0])]
+
+    return keyed_state(
+        ev.select("user_id", "ts"),
+        per_user(seen, "last_us long", alert),
+        output="user_id long, last_seen_us long",
+        event_time="ts",
+    )
+
+
 @register(
     "q_inactivity_alert", oracle=_INACTIVITY_ORACLE, tags=("streaming",)
 )
 def q_inactivity_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2: event-time timers — Flink's
     `ctx.timerService().registerEventTimeTimer` + onTimer inactivity
-    alert.  Each key keeps last-seen time in GroupState and arms an
-    event-time timeout 12h ahead; when the watermark passes it,
-    hasTimedOut fires and the alert row is emitted (the onTimer
+    alert.  Each key keeps last-seen time in keyed state and arms an
+    event-time timer 12h ahead (streaming/keyed.py keeps Spark's
+    per-key EventTimeTimeout semantics); when the watermark passes it,
+    the timer fires and the alert row is emitted (the onTimer
     callback).  Bounded replay: alerts = users whose last event is
     >12h before the corpus max event time — the oracle states exactly
     that.
 
     (transformWithStateInPandas — the Spark 4 native timer API — needs
-    protobuf, absent in this container; applyInPandasWithState's
+    protobuf, which is not installed; applyInPandasWithState's
     EventTimeTimeout is the same timer semantics on the stable API.)"""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    timeout_ms = 12 * 3600 * 1000
-
-    def inactivity(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            (last_us,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "last_seen_us": [last_us]}
-            )
-        else:
-            max_us = -1
-            for pdf in pdfs:
-                max_us = max(max_us, int(pdf["ts"].max().value // 1_000))
-            prev = state.get[0] if state.exists else None
-            if prev is None or max_us > prev:
-                state.update((max_us,))
-                state.setTimeoutTimestamp(max_us // 1000 + timeout_ms)
-            yield pd.DataFrame({"user_id": [], "last_seen_us": []})
-
-    ev = (
-        events_file_replay(spark, sf_dir)
-        .withWatermark("ts", "0 seconds")
-        .select("user_id", "ts")
-    )
-    alerts = ev.groupBy("user_id").applyInPandasWithState(
-        inactivity,
-        outputStructType="user_id long, last_seen_us long",
-        stateStructType="last_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    ev = events_file_replay(spark, sf_dir).select("user_id", "ts")
+    alerts = inactivity_stream(ev)
     result = run_to_memory(alerts, spark, output_mode="append")
     return result.select(
         "user_id",
@@ -927,49 +898,39 @@ GROUP BY user_id
 """
 
 
+def counter_stream(ev: DataFrame) -> DataFrame:
+    """The running-counter kernel behind q_stateful_counter: per user,
+    state is (n_events, n_errors).  Input: a streaming frame with
+    (user_id, event_type)."""
+
+    def count(user_id, prev, rows):
+        n_events, n_errors = prev or (0, 0)
+        types = rows["event_type"]
+        n_events += len(types)
+        n_errors += types.count("error")
+        return (n_events, n_errors), [(user_id, n_events, n_errors)]
+
+    return keyed_state(
+        ev.select("user_id", "event_type"),
+        per_user(count, "n_events long, n_errors long"),
+        output="user_id long, n_events long, n_errors long",
+        mode="update",
+    )
+
+
 @register("q_stateful_counter", oracle=_STATEFUL_ORACLE, tags=("streaming",))
 def q_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: KeyedProcessFunction + ValueState — a per-key running
-    counter in applyInPandasWithState (per-user event and error
-    counts persisted in GroupState across micro-batches).
+    counter in keyed state (per-user event and error counts persisted
+    across micro-batches, streaming/keyed.py).
 
     Emits the updated counts each micro-batch; the single-file replay
     drains in exactly one batch, so the bounded run emits one final row
     per key and is oracle-checkable (multi-batch production runs emit
     one row per key per batch — update-mode semantics, like Flink's
     per-record keyed output)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = events_file_replay(spark, sf_dir).select(
-        "user_id", "event_type"
-    )
-
-    def count_events(key, pdfs, state: GroupState):
-        (user_id,) = key
-        n_events, n_errors = (
-            state.get if state.exists else (0, 0)
-        )
-        for pdf in pdfs:
-            n_events += len(pdf)
-            n_errors += int((pdf["event_type"] == "error").sum())
-        state.update((n_events, n_errors))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n_events],
-                "n_errors": [n_errors],
-            }
-        )
-
-    counted = ev.groupBy("user_id").applyInPandasWithState(
-        count_events,
-        outputStructType="user_id long, n_events long, n_errors long",
-        stateStructType="n_events long, n_errors long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return run_to_memory(counted, spark, output_mode="update")
+    ev = events_file_replay(spark, sf_dir).select("user_id", "event_type")
+    return run_to_memory(counter_stream(ev), spark, output_mode="update")
 
 
 from flink_streaming_example_spark.operators.cep import (  # noqa: E402
@@ -984,30 +945,16 @@ def cep_funnel_stream(ev: DataFrame) -> DataFrame:
     timestamps (the whole NFA for a fixed 3-step last-match pattern),
     so state is O(1) per user however long the stream runs; matches
     emit immediately on the purchase event (no timers, append mode).
-
-    Same ordering contract as count_windows_stream: events for a key
-    must arrive in (ts, event_id) order across micro-batches (sorted
-    within each batch here; a keyed Kafka topic provides it across
-    batches — tests/test_multibatch.py proves the composition on a
-    time-ordered 6-shard replay)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Events are processed in (ts, event_id) order under the harness's
+    ordering contract (streaming/keyed.py)."""
     seven_days_us = 7 * 86400 * 1_000_000
 
-    def detect(key, pdfs, state: GroupState):
-        (user_id,) = key
-        last_click, last_view = state.get if state.exists else (None, None)
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        ts = pdf["ts"]
-        if getattr(ts.dtype, "tz", None) is not None:
-            ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-        # normalize to µs regardless of the serializer's unit (ns vs µs
-        # differs across Arrow/pandas versions; a raw astype(int64)
-        # would silently shift the 7-day window by 1000x)
-        us = ts.astype("datetime64[us]").astype("int64")
+    def detect(user_id, prev, rows):
+        last_click, last_view = prev or (None, None)
         out = []
-        for ts_us, event_id, etype in zip(us, pdf["event_id"], pdf["event_type"]):
+        for ts_us, event_id, etype in zip(
+            rows["ts"], rows["event_id"], rows["event_type"]
+        ):
             if (
                 etype == "purchase"
                 and last_click is not None
@@ -1020,32 +967,24 @@ def cep_funnel_stream(ev: DataFrame) -> DataFrame:
                 last_click = ts_us
             elif etype == "view":
                 last_view = ts_us
-        state.update((last_click, last_view))
-        frame = pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "purchase_id",
-                "last_click_ts",
-                "last_view_ts",
-                "purchase_ts",
-            ],
-        )
-        for c in ("last_click_ts", "last_view_ts", "purchase_ts"):
-            frame[c] = pd.to_datetime(frame[c], unit="us")
-        yield frame
+        return (last_click, last_view), out
 
-    return ev.select(
-        "user_id", "event_id", "event_type", "ts"
-    ).groupBy("user_id").applyInPandasWithState(
-        detect,
-        outputStructType=(
-            "user_id long, purchase_id long, last_click_ts timestamp, "
-            "last_view_ts timestamp, purchase_ts timestamp"
+    matched = keyed_state(
+        ev.select("user_id", "event_id", "event_type", "ts"),
+        per_user(detect, "last_click long, last_view long"),
+        output=(
+            "user_id long, purchase_id long, last_click_us long, "
+            "last_view_us long, purchase_us long"
         ),
-        stateStructType="last_click long, last_view long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        order=("ts", "event_id"),
+    )
+    return matched.select(
+        "user_id",
+        "purchase_id",
+        *[
+            F.timestamp_micros(f"{c}_us").alias(f"{c}_ts")
+            for c in ("last_click", "last_view", "purchase")
+        ],
     )
 
 
@@ -1201,104 +1140,6 @@ def asof_union_stream(ev: DataFrame, orders: DataFrame) -> DataFrame:
     return rights.unionByName(lefts)
 
 
-# --- keyed-state KEY GROUPS (guide §4.2, optimization round 16) -----
-#
-# The as-of family's state functions are semantically per-user, but
-# physically invoking the Python kernel once per user is the dominant
-# cost at fixture scale: the sf0.1 union carries ~250k rows across
-# ~15k distinct user_ids (~17 rows/group), and every group pays the
-# fixed applyInPandasWithState overhead (Arrow slice -> pandas frame,
-# kernel call, output frame, state row round-trip) for microseconds of
-# real work.  Flink itself never runs keyed state one-key-at-a-time:
-# keys hash into a fixed number of KEY GROUPS (maxParallelism, default
-# 128) and each group's state lives and moves together.  The same
-# layout here — groupBy(pmod(xxhash64(user_id), 128)) with per-user
-# entries vectorized inside the group — cuts kernel invocations from
-# ~15k to <=128 per micro-batch while every per-user semantic
-# (carry, buffering, timers, cross-batch composition) is preserved
-# bit-for-bit; tests/test_multibatch.py re-proves the sharded-replay
-# composition on the bucketed kernels and the driver hash-checks the
-# outputs against the unchanged batch oracles.  At production scale
-# the constant is the Flink default; raise it the same way
-# maxParallelism is raised (it bounds state-rebalance granularity,
-# not correctness).
-_N_KEY_GROUPS = 128
-
-
-def _key_grouped(union_df: DataFrame) -> "DataFrame":
-    # materialized column, not a groupBy expression:
-    # FlatMapGroupsInPandasWithState resolves its grouping attributes
-    # against the child's output, so an aliased expression fails analysis
-    return union_df.withColumn(
-        "kg", F.pmod(F.xxhash64("user_id"), F.lit(_N_KEY_GROUPS))
-    ).groupBy("kg")
-
-
-def _seg_last_flag_pos(gid, flag_pos, n):
-    """Segmented forward scan: for each row i (rows pre-sorted so each
-    group is contiguous, ``gid`` its 0-based group index), the position
-    of the most recent row at-or-before i WITHIN i's group whose
-    ``flag_pos`` is set (>= 0; -1 = unset).  Returns (valid, pos) —
-    the vectorized equivalent of "carry the last order seen so far"
-    with per-user resets, via one np.maximum.accumulate over
-    gid*(n+1)+(flag_pos+1) (monotone in gid, so a previous group's
-    flags can never leak: they decode to a smaller gid and fail the
-    validity check)."""
-    import numpy as np
-
-    step = np.int64(n + 1)
-    key = gid * step + (flag_pos + np.int64(1))
-    acc = np.maximum.accumulate(key)
-    valid = (acc // step == gid) & (acc % step > 0)
-    return valid, acc % step - 1
-
-
-def _group_index(u):
-    """(head_mask, gid) for a sorted key array: head marks each
-    group's first row, gid numbers groups 0..G-1 in order."""
-    import numpy as np
-
-    head = np.empty(u.size, dtype=bool)
-    head[0] = True
-    head[1:] = u[1:] != u[:-1]
-    return head, np.cumsum(head) - 1
-
-
-def _merge_carry(su, sl, uu, ul):
-    """Merge per-user carry updates (uu, ul) into the sorted state
-    arrays (su, sl); a user present in both takes the batch value.
-    Returns new sorted (users, last) arrays."""
-    import numpy as np
-
-    if not uu.size:
-        return su, sl
-    if not su.size:
-        return uu, ul
-    allu = np.concatenate([su, uu])
-    allv = np.concatenate([sl, ul])
-    order = np.argsort(allu, kind="stable")
-    allu, allv = allu[order], allv[order]
-    # stable sort keeps state-then-batch order within a duplicate key;
-    # keeping the LAST occurrence therefore keeps the batch value
-    keep = np.empty(allu.size, dtype=bool)
-    keep[:-1] = allu[1:] != allu[:-1]
-    keep[-1] = True
-    return allu[keep], allv[keep]
-
-
-def _carry_lookup(su, sl, u):
-    """Per-row carry lookup: for each (sorted-irrelevant) user id in
-    ``u``, (has_carry, value) from the sorted state arrays."""
-    import numpy as np
-
-    if not su.size:
-        return np.zeros(u.size, dtype=bool), np.zeros(u.size, np.int64)
-    ix = np.searchsorted(su, u)
-    ix = np.minimum(ix, su.size - 1)
-    has = su[ix] == u
-    return has, np.where(has, sl[ix], np.int64(0))
-
-
 def asof_stream(union_df: DataFrame) -> DataFrame:
     """J9-streaming: backward as-of as a keyed two-input process
     function — Flink's CoProcessFunction enrichment pattern.  Per-user
@@ -1307,43 +1148,23 @@ def asof_stream(union_df: DataFrame) -> DataFrame:
     with the current carry.  This is the streaming execution of exactly
     the union + running-carry formulation the batch q_asof_join uses —
     same timeline, same (t, side) ordering, so the bounded replay
-    hash-matches the batch oracle.  Physically the users are hashed
-    into _N_KEY_GROUPS key groups (see the block comment above) and the
-    carry runs as one vectorized segmented scan per group — identical
-    per-user semantics, ~100x fewer Python kernel invocations.
-
-    Ordering contract (same as count_windows_stream/cep_funnel_stream):
-    a key's rows must arrive in (t_us, side) order ACROSS micro-batches
-    — i.e. both topics keyed by user_id and time-ordered, with aligned
-    progress (a Kafka consumer reading both topics with aligned offsets
-    provides it; tests/test_multibatch.py proves the composition on
-    time-aligned shard replays).  Within a batch, rows are sorted here."""
+    hash-matches the batch oracle.  The carry runs as one vectorized
+    segmented scan per key group (streaming/keyed.py), whose ordering
+    contract covers both topics: keyed by user_id, time-ordered, with
+    aligned progress (a Kafka consumer reading both topics with aligned
+    offsets provides it; tests/test_multibatch.py proves the
+    composition on time-aligned shard replays)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def carry(key, pdfs, state: GroupState):
-        if state.exists:
-            su = np.asarray(state.get[0], dtype=np.int64)
-            sl = np.asarray(state.get[1], dtype=np.int64)
-        else:
-            su = sl = np.empty(0, dtype=np.int64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        user = pdf["user_id"].to_numpy(np.int64)
-        t = pdf["t_us"].to_numpy(np.int64)
-        side = pdf["side"].to_numpy(np.int64)
-        # (user, t, side): a tied order sorts BEFORE its tied event, so
-        # the event reads it — the <= tie of the batch oracle, exactly
-        # the per-key sort_values(["t_us", "side"]) of the row kernel
-        srt = np.lexsort((side, t, user))
-        u, t, side = user[srt], t[srt], side[srt]
-        eid = pdf["event_id"].to_numpy()[srt]
+    def carry(cols, carried, wm):
+        su, sl = int_state(carried, 2)
+        u, t, side = cols["user_id"], cols["t_us"], cols["side"]
         n = u.size
-        head, gid = _group_index(u)
+        head, gid = group_index(u)
         flag = np.where(side == 0, np.arange(n, dtype=np.int64), np.int64(-1))
-        valid, pos = _seg_last_flag_pos(gid, flag, n)
-        has_c, cval = _carry_lookup(su, sl, u)
+        valid, pos = seg_last_flag_pos(gid, flag, n)
+        has_c, cval = carry_lookup(su, sl, u)
         res = np.where(valid, t[np.where(valid, pos, 0)], cval)
         has = valid | has_c
         ev = side == 1
@@ -1352,26 +1173,21 @@ def asof_stream(union_df: DataFrame) -> DataFrame:
         end = np.flatnonzero(np.append(head[1:], True))
         upd = valid[end]
         new_u, new_l = u[end][upd], t[np.where(valid, pos, 0)][end][upd]
-        su, sl = _merge_carry(su, sl, new_u, new_l)
-        if su.size:
-            state.update((su.tolist(), sl.tolist()))
-        out_last = res[ev]
-        yield pd.DataFrame(
-            {
-                "event_id": eid[ev].astype(np.int64),
-                "user_id": u[ev],
-                "last_order_us": pd.arrays.IntegerArray(
-                    out_last, mask=~has[ev]
-                ),
-            }
-        )
+        su, sl = merge_carry(su, sl, new_u, new_l)
+        out = {
+            "event_id": np.ma.getdata(cols["event_id"])[ev],
+            "user_id": u[ev],
+            "last_order_us": pd.arrays.IntegerArray(res[ev], mask=~has[ev]),
+        }
+        return ((su, sl) if su.size else None), out, None
 
-    return _key_grouped(union_df).applyInPandasWithState(
-        carry,
-        outputStructType="event_id long, user_id long, last_order_us long",
-        stateStructType="users array<long>, last array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # (user, t, side): a tied order sorts BEFORE its tied event, so
+    # the event reads it — the <= tie of the batch oracle
+    return keyed_state(
+        union_df,
+        Kernel("users array<long>, last array<long>", carry),
+        output="event_id long, user_id long, last_order_us long",
+        order=("t_us", "side"),
     )
 
 
@@ -1405,70 +1221,51 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
     order and got the NEXT one or NULL).  For ts strictly below
     last_us — out-of-order input beyond what the aligned-progress
     contract admits — last_us is the earliest KNOWN order at-or-after
-    ts, the best answer available without unbounded order history."""
+    ts, the best answer available without unbounded order history.
+
+    Group state: the sorted per-user carry arrays (users/last) plus the
+    pending buffer as parallel (user, event_id) arrays; every per-user
+    rule is applied segment-wise."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def forward(key, pdfs, state: GroupState):
-        # Key-group kernel (see _N_KEY_GROUPS): state holds the sorted
-        # per-user carry arrays (users/last) plus the pending buffer as
-        # parallel (user, event_id) arrays; every per-user rule of the
-        # original per-key kernel is applied segment-wise below.
-        def frame(ids, users, next_us, next_mask):
-            return pd.DataFrame(
-                {
-                    "event_id": np.asarray(ids, dtype=np.int64),
-                    "user_id": np.asarray(users, dtype=np.int64),
-                    "next_order_us": pd.arrays.IntegerArray(
-                        np.asarray(next_us, dtype=np.int64),
-                        mask=np.asarray(next_mask, dtype=bool),
-                    ),
-                }
-            )
+    def frame(ids, users, next_us, next_mask):
+        return {
+            "event_id": np.asarray(ids, dtype=np.int64),
+            "user_id": np.asarray(users, dtype=np.int64),
+            "next_order_us": pd.arrays.IntegerArray(
+                np.asarray(next_us, dtype=np.int64),
+                mask=np.asarray(next_mask, dtype=bool),
+            ),
+        }
 
-        if state.hasTimedOut:
-            su, sl, pu, pe = state.get
-            # keep the order-time carries (timer-free state row) so a
-            # late tied event can still resolve; only the buffer dies
-            state.update((list(su), list(sl), [], []))
-            yield frame(pe, pu, [0] * len(pe), [True] * len(pe))
-            return
-        if state.exists:
-            su = np.asarray(state.get[0], dtype=np.int64)
-            sl = np.asarray(state.get[1], dtype=np.int64)
-            pu = np.asarray(state.get[2], dtype=np.int64)
-            pe = np.asarray(state.get[3], dtype=np.int64)
-        else:
-            su = sl = pu = pe = np.empty(0, dtype=np.int64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        user = pdf["user_id"].to_numpy(np.int64)
-        t = pdf["t_us"].to_numpy(np.int64)
-        side = pdf["side"].to_numpy(np.int64)
-        # (user, t asc, side desc): a same-instant order lands AFTER
-        # its tied events (>= satisfied, mirroring _asof_forward)
-        srt = np.lexsort((-side, t, user))
-        u, t, side = user[srt], t[srt], side[srt]
-        eid = pdf["event_id"].to_numpy()[srt]
+    def flush(carried, wm):
+        su, sl, pu, pe = int_state(carried, 4)
+        # keep the order-time carries (timer-free state row) so a late
+        # tied event can still resolve; only the buffer dies
+        empty = np.empty(0, dtype=np.int64)
+        out = frame(pe, pu, np.zeros(pe.size), np.ones(pe.size))
+        return (su, sl, empty, empty), out, None
+
+    def forward(cols, carried, wm):
+        su, sl, pu, pe = int_state(carried, 4)
+        u, t, side = cols["user_id"], cols["t_us"], cols["side"]
+        eid = np.ma.getdata(cols["event_id"])
         n = u.size
-        head, gid = _group_index(u)
+        head, gid = group_index(u)
         idx = np.arange(n, dtype=np.int64)
         # segmented NEXT order at-or-after each row: the same carry
         # scan run over the reversed arrays (a group stays contiguous
-        # reversed; its gid order flips, which _seg_last_flag_pos
+        # reversed; its gid order flips, which seg_last_flag_pos
         # handles because any monotone group numbering works)
-        r_u = u[::-1]
-        r_head, r_gid = _group_index(r_u)
-        r_flag = np.where(
-            side[::-1] == 0, idx, np.int64(-1)
-        )  # idx here = reversed position
-        r_valid, r_pos = _seg_last_flag_pos(r_gid, r_flag, n)
+        _r_head, r_gid = group_index(u[::-1])
+        r_flag = np.where(side[::-1] == 0, idx, np.int64(-1))
+        r_valid, r_pos = seg_last_flag_pos(r_gid, r_flag, n)
         nxt_valid = r_valid[::-1]
         nxt_pos = (np.int64(n - 1) - np.where(r_valid, r_pos, 0))[::-1]
         # segmented LAST order per group (for the carry update)
         flag = np.where(side == 0, idx, np.int64(-1))
-        lv, lp = _seg_last_flag_pos(gid, flag, n)
+        lv, lp = seg_last_flag_pos(gid, flag, n)
         end = np.flatnonzero(np.append(head[1:], True))
         g_user = u[end]
         g_has_ord = lv[end]
@@ -1476,10 +1273,9 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         # per-user FIRST in-batch order (group head's next-order scan)
         hd = np.flatnonzero(head)
         g_first_ord = t[np.where(nxt_valid, nxt_pos, 0)][hd]
-        has_c, cval = _carry_lookup(su, sl, u)
+        has_c, cval = carry_lookup(su, sl, u)
         ev = side == 1
-        ev_u, ev_t = u[ev], t[ev]
-        ev_id = eid[ev].astype(np.int64)
+        ev_u, ev_t, ev_id = u[ev], t[ev], eid[ev]
         # cross-batch tie/carry resolution (docstring): events
         # at-or-before their user's last order already seen resolve to
         # it right away instead of buffering past their match
@@ -1487,7 +1283,6 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         out_ids = ev_id[done].tolist()
         out_users = ev_u[done].tolist()
         out_next = cval[ev][done].tolist()
-        out_mask = [False] * len(out_ids)
         # prior-batch buffer flushes on its user's first in-batch order
         if pu.size:
             p_ix = np.searchsorted(g_user, pu)
@@ -1496,7 +1291,6 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
             out_ids.extend(pe[p_hit].tolist())
             out_users.extend(pu[p_hit].tolist())
             out_next.extend(g_first_ord[p_ix][p_hit].tolist())
-            out_mask.extend([False] * int(p_hit.sum()))
             pu, pe = pu[~p_hit], pe[~p_hit]
         # in-batch resolution for the remaining events
         live = ~done
@@ -1504,7 +1298,6 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         out_ids.extend(ev_id[hit].tolist())
         out_users.extend(ev_u[hit].tolist())
         out_next.extend(t[np.where(nxt_valid, nxt_pos, 0)][ev][hit].tolist())
-        out_mask.extend([False] * int(hit.sum()))
         buf = live & ~nxt_valid[ev]
         if buf.any():
             pu = np.concatenate([pu, ev_u[buf]])
@@ -1512,40 +1305,36 @@ def asof_forward_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         # carry update: max(old, last in-batch order) per user
         upd_u = g_user[g_has_ord]
         upd_l = g_last_ord[g_has_ord]
-        old_has, old_val = _carry_lookup(su, sl, upd_u)
+        old_has, old_val = carry_lookup(su, sl, upd_u)
         upd_l = np.where(old_has, np.maximum(upd_l, old_val), upd_l)
-        su, sl = _merge_carry(su, sl, upd_u, upd_l)
+        su, sl = merge_carry(su, sl, upd_u, upd_l)
+        out = frame(out_ids, out_users, out_next, np.zeros(len(out_ids)))
         # Timer ONLY for groups with something to flush: the
         # end-of-input sweep invokes the Python kernel once per
-        # timed-out group — with key groups that is <=128 calls where
-        # the per-key layout paid one per buffered user (~6k at sf0.1,
-        # the dominant cost of the r7 kernel's flush sweep).
+        # timed-out group, <=128 calls.
         if pu.size:
-            state.update((su.tolist(), sl.tolist(), pu.tolist(), pe.tolist()))
-            state.setTimeoutTimestamp(
-                max(flush_after_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        elif su.size:
+            return (su, sl, pu, pe), out, max(flush_after_ms, wm + 1)
+        if su.size:
             # no buffer, but keep the timer-free order-time carries so
-            # a late tied event can still resolve (docstring);
-            # carry-only rows never join the timeout sweep
-            state.update((su.tolist(), sl.tolist(), [], []))
-        elif state.exists:
-            state.remove()
-        yield frame(out_ids, out_users, out_next, out_mask)
+            # a late tied event can still resolve (docstring)
+            empty = np.empty(0, dtype=np.int64)
+            return (su, sl, empty, empty), out, None
+        return None, out, None
 
-    u = union_df.withColumn(
-        "ts_wm", F.timestamp_micros(F.col("t_us"))
-    ).withWatermark("ts_wm", "0 seconds")
-    return _key_grouped(u).applyInPandasWithState(
-        forward,
-        outputStructType="event_id long, user_id long, next_order_us long",
-        stateStructType=(
-            "users array<long>, last array<long>, "
-            "pu array<long>, pe array<long>"
+    u = union_df.withColumn("ts_wm", F.timestamp_micros(F.col("t_us")))
+    # (user, t asc, side desc): a same-instant order lands AFTER its
+    # tied events (>= satisfied, mirroring _asof_forward)
+    return keyed_state(
+        u,
+        Kernel(
+            "users array<long>, last array<long>, pu array<long>, "
+            "pe array<long>",
+            forward,
+            flush,
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        output="event_id long, user_id long, next_order_us long",
+        order=("t_us", "-side"),
+        event_time="ts_wm",
     )
 
 
@@ -1617,10 +1406,13 @@ def asof_nearest_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
     _asof_nearest); events with no later order resolve to their
     backward snapshot at the end-of-input timer.  State per key is the
     O(1) carry plus the pending buffer — the same
-    bounded-by-next-order/horizon profile as the forward twin."""
+    bounded-by-next-order/horizon profile as the forward twin.
+
+    Group state: sorted per-user carry arrays (users/last, -1 = none
+    yet) plus the pending buffer as parallel (user, event_id, event_t,
+    bwd-snapshot) arrays."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def _resolve_vec(t, bwd, fwd, fwd_has):
         """Vectorized closest-side pick; bwd < 0 = no backward
@@ -1639,66 +1431,39 @@ def asof_nearest_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
 
     def frame(ids, users, near, dist, none):
         none = np.asarray(none, dtype=bool)
-        return pd.DataFrame(
-            {
-                "event_id": np.asarray(ids, dtype=np.int64),
-                "user_id": np.asarray(users, dtype=np.int64),
-                "nearest_us": pd.arrays.IntegerArray(
-                    np.asarray(near, dtype=np.int64), mask=none.copy()
-                ),
-                "dist_us": pd.arrays.IntegerArray(
-                    np.asarray(dist, dtype=np.int64), mask=none.copy()
-                ),
-            }
-        )
+        return {
+            "event_id": np.asarray(ids, dtype=np.int64),
+            "user_id": np.asarray(users, dtype=np.int64),
+            "nearest_us": pd.arrays.IntegerArray(
+                np.asarray(near, dtype=np.int64), mask=none.copy()
+            ),
+            "dist_us": pd.arrays.IntegerArray(
+                np.asarray(dist, dtype=np.int64), mask=none.copy()
+            ),
+        }
 
-    def nearest(key, pdfs, state: GroupState):
-        # Key-group kernel (see _N_KEY_GROUPS): sorted per-user carry
-        # arrays (users/last, -1 = none yet) plus the pending buffer as
-        # parallel (user, event_id, event_t, bwd-snapshot) arrays.
-        if state.hasTimedOut:
-            _su, _sl, pu, pe, pt, pb = state.get
-            state.remove()
-            pt = np.asarray(pt, dtype=np.int64)
-            pb = np.asarray(pb, dtype=np.int64)
-            near, dist, none = _resolve_vec(
-                pt, pb, np.zeros(pt.size, np.int64),
-                np.zeros(pt.size, dtype=bool),
-            )
-            yield frame(pe, pu, near, dist, none)
-            return
-        if state.exists:
-            su = np.asarray(state.get[0], dtype=np.int64)
-            sl = np.asarray(state.get[1], dtype=np.int64)
-            pu = np.asarray(state.get[2], dtype=np.int64)
-            pe = np.asarray(state.get[3], dtype=np.int64)
-            pt = np.asarray(state.get[4], dtype=np.int64)
-            pb = np.asarray(state.get[5], dtype=np.int64)
-        else:
-            su = sl = pu = pe = pt = pb = np.empty(0, dtype=np.int64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        user = pdf["user_id"].to_numpy(np.int64)
-        t = pdf["t_us"].to_numpy(np.int64)
-        side = pdf["side"].to_numpy(np.int64)
-        # (user, t asc, side desc): tied order sorts AFTER its tied
-        # events — backward excludes the tie, forward includes it,
-        # exactly the per-key kernel's searchsorted geometry
-        srt = np.lexsort((-side, t, user))
-        u, t, side = user[srt], t[srt], side[srt]
-        eid = pdf["event_id"].to_numpy()[srt]
+    def flush(carried, wm):
+        _su, _sl, pu, pe, pt, pb = int_state(carried, 6)
+        near, dist, none = _resolve_vec(
+            pt, pb, np.zeros(pt.size, np.int64), np.zeros(pt.size, dtype=bool)
+        )
+        return None, frame(pe, pu, near, dist, none), None
+
+    def nearest(cols, carried, wm):
+        su, sl, pu, pe, pt, pb = int_state(carried, 6)
+        u, t, side = cols["user_id"], cols["t_us"], cols["side"]
+        eid = np.ma.getdata(cols["event_id"])
         n = u.size
-        head, gid = _group_index(u)
+        head, gid = group_index(u)
         idx = np.arange(n, dtype=np.int64)
         flag = np.where(side == 0, idx, np.int64(-1))
         # backward: last order strictly before the row (the row itself
         # is an event wherever we read this, so at-or-before == before)
-        b_valid, b_pos = _seg_last_flag_pos(gid, flag, n)
+        b_valid, b_pos = seg_last_flag_pos(gid, flag, n)
         # forward: first order at-or-after, via the reversed scan
-        r_u = u[::-1]
-        _r_head, r_gid = _group_index(r_u)
+        _r_head, r_gid = group_index(u[::-1])
         r_flag = np.where(side[::-1] == 0, idx, np.int64(-1))
-        r_valid, r_pos = _seg_last_flag_pos(r_gid, r_flag, n)
+        r_valid, r_pos = seg_last_flag_pos(r_gid, r_flag, n)
         f_valid = r_valid[::-1]
         f_pos = (np.int64(n - 1) - np.where(r_valid, r_pos, 0))[::-1]
         f_t = t[f_pos]
@@ -1708,11 +1473,10 @@ def asof_nearest_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         g_has_ord = b_valid[end]  # any order in the group at all
         g_last_ord = t[np.where(b_valid, b_pos, 0)][end]
         g_first_ord = f_t[hd]
-        has_c, cval = _carry_lookup(su, sl, u)
+        has_c, cval = carry_lookup(su, sl, u)
         cval = np.where(has_c, cval, np.int64(-1))  # -1 = no carry
         ev = side == 1
-        ev_u, ev_t = u[ev], t[ev]
-        ev_id = eid[ev].astype(np.int64)
+        ev_u, ev_t, ev_id = u[ev], t[ev], eid[ev]
         # per-event backward snapshot: in-batch last order before it,
         # else the carried last_us (may be -1 = none)
         bwd = np.where(
@@ -1720,38 +1484,31 @@ def asof_nearest_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
         )
         # prior-batch buffer: its user's first in-batch order is the
         # forward candidate (only users with an in-batch order resolve)
-        out_ids: list = []
-        out_users: list = []
-        out_near: list = []
-        out_dist: list = []
-        out_none: list = []
+        parts = []
         if pu.size and g_user.size:
             p_ix = np.searchsorted(g_user, pu)
             p_ix = np.minimum(p_ix, g_user.size - 1)
             p_hit = (g_user[p_ix] == pu) & g_has_ord[p_ix]
             if p_hit.any():
-                near, dist, none = _resolve_vec(
-                    pt[p_hit], pb[p_hit], g_first_ord[p_ix][p_hit],
-                    np.ones(int(p_hit.sum()), dtype=bool),
+                parts.append(
+                    (pe[p_hit], pu[p_hit])
+                    + _resolve_vec(
+                        pt[p_hit], pb[p_hit], g_first_ord[p_ix][p_hit],
+                        np.ones(int(p_hit.sum()), dtype=bool),
+                    )
                 )
-                out_ids.extend(pe[p_hit].tolist())
-                out_users.extend(pu[p_hit].tolist())
-                out_near.extend(near.tolist())
-                out_dist.extend(dist.tolist())
-                out_none.extend(none.tolist())
-                pu, pe, pt, pb = pu[~p_hit], pe[~p_hit], pt[~p_hit], pb[~p_hit]
+                keep = ~p_hit
+                pu, pe, pt, pb = pu[keep], pe[keep], pt[keep], pb[keep]
         # events with an in-batch forward candidate resolve now
         hit = f_valid[ev]
         if hit.any():
-            near, dist, none = _resolve_vec(
-                ev_t[hit], bwd[hit], f_t[ev][hit],
-                np.ones(int(hit.sum()), dtype=bool),
+            parts.append(
+                (ev_id[hit], ev_u[hit])
+                + _resolve_vec(
+                    ev_t[hit], bwd[hit], f_t[ev][hit],
+                    np.ones(int(hit.sum()), dtype=bool),
+                )
             )
-            out_ids.extend(ev_id[hit].tolist())
-            out_users.extend(ev_u[hit].tolist())
-            out_near.extend(near.tolist())
-            out_dist.extend(dist.tolist())
-            out_none.extend(none.tolist())
         buf = ~hit
         if buf.any():
             pu = np.concatenate([pu, ev_u[buf]])
@@ -1759,40 +1516,33 @@ def asof_nearest_stream(union_df: DataFrame, flush_after_ms: int) -> DataFrame:
             pt = np.concatenate([pt, ev_t[buf]])
             pb = np.concatenate([pb, bwd[buf]])
         # carry update: the group's LAST in-batch order replaces the
-        # carry outright (matches the per-key kernel, which overwrote
-        # rather than max-ing — in-order input makes them identical)
-        su, sl = _merge_carry(su, sl, g_user[g_has_ord], g_last_ord[g_has_ord])
-        state.update(
-            (
-                su.tolist(), sl.tolist(),
-                pu.tolist(), pe.tolist(), pt.tolist(), pb.tolist(),
+        # carry outright (in-order input makes this equal to a max)
+        su, sl = merge_carry(su, sl, g_user[g_has_ord], g_last_ord[g_has_ord])
+        out = frame(
+            *(
+                np.concatenate([p[i] for p in parts]) if parts else []
+                for i in range(5)
             )
         )
         # Timer only for groups holding unresolved events (<=128
-        # timeout invocations vs one per buffered user before); a group
-        # whose buffer empties later may see a previously-set timer
-        # fire with nothing pending, which emits an empty frame
-        # (harmless).
-        if pu.size:
-            state.setTimeoutTimestamp(
-                max(flush_after_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        yield frame(out_ids, out_users, out_near, out_dist, out_none)
+        # timeout invocations per sweep)
+        timer = max(flush_after_ms, wm + 1) if pu.size else None
+        return (su, sl, pu, pe, pt, pb), out, timer
 
-    u = union_df.withColumn(
-        "ts_wm", F.timestamp_micros(F.col("t_us"))
-    ).withWatermark("ts_wm", "0 seconds")
-    return _key_grouped(u).applyInPandasWithState(
-        nearest,
-        outputStructType=(
-            "event_id long, user_id long, nearest_us long, dist_us long"
-        ),
-        stateStructType=(
+    u = union_df.withColumn("ts_wm", F.timestamp_micros(F.col("t_us")))
+    # (user, t asc, side desc): tied order sorts AFTER its tied
+    # events — backward excludes the tie, forward includes it
+    return keyed_state(
+        u,
+        Kernel(
             "users array<long>, last array<long>, pu array<long>, "
-            "pe array<long>, pt array<long>, pb array<long>"
+            "pe array<long>, pt array<long>, pb array<long>",
+            nearest,
+            flush,
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        output="event_id long, user_id long, nearest_us long, dist_us long",
+        order=("t_us", "-side"),
+        event_time="ts_wm",
     )
 
 
@@ -1912,45 +1662,24 @@ def anomaly_stream(ev: DataFrame) -> DataFrame:
     factored out so the multibatch test drives the IDENTICAL code over
     time-split shards (the repo's one-implementation rule).  Input:
     a streaming frame with (user_id, ts, event_id, vi)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def judge(key, pdfs, state: GroupState):
-        (user_id,) = key
-        m, s1, s2, flags = state.get if state.exists else (0, 0, 0, 0)
-        m, s1, s2, flags = int(m), int(s1), int(s2), int(flags)
-        # whole-group sort: concat ALL Arrow chunks first — per-chunk
-        # sorting is arbitrary across chunks once a key spans more
-        # than one Arrow record batch (r10 ADVICE)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-            for x in (int(v) for v in pdf["vi"]):
-                if m >= 8 and (m * x - s1) ** 2 > 9 * (m * s2 - s1 * s1):
-                    flags += 1
-                m += 1
-                s1 += x
-                s2 += x * x
-        state.update((m, s1, s2, flags))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [m],
-                "n_anomalies": [flags],
-            }
-        )
+    def judge(user_id, prev, rows):
+        m, s1, s2, flags = prev or (0, 0, 0, 0)
+        for x in rows["vi"]:
+            if m >= 8 and (m * x - s1) ** 2 > 9 * (m * s2 - s1 * s1):
+                flags += 1
+            m += 1
+            s1 += x
+            s2 += x * x
+        return (m, s1, s2, flags), [(user_id, m, flags)]
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        judge,
-        outputStructType="user_id long, n_events long, n_anomalies long",
-        stateStructType="m long, s1 long, s2 long, flags long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "vi"),
+        per_user(judge, "m long, s1 long, s2 long, flags long"),
+        output="user_id long, n_events long, n_anomalies long",
+        order=("ts", "event_id"),
+        mode="update",
     )
-
-
-# milli-scaling of value, JVM-side, identical in both engines (round
-# half-up at scale 3 on DECIMAL)
 ANOMALY_VI_EXPR = (
     "CAST(round(CAST(CAST(value AS STRING) AS DECIMAL(30,6)), 3) * 1000"
     " AS BIGINT)"
@@ -1976,10 +1705,9 @@ def q_streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-up at scale 3 on DECIMAL — both engines agree) BEFORE the
     Python kernel, whose comparisons run in arbitrary-precision Python
     ints; the oracle computes the same in HUGEINT.  State per key is
-    three BIGINTs — constant, watermark-free.  Events are sorted by
-    (ts, event_id) within each micro-batch; across batches the
-    time-ordered replay preserves prefix order (the multibatch test
-    feeds time-split shards and still matches)."""
+    three BIGINTs — constant, watermark-free; events run in (ts,
+    event_id) order under the keyed-state ordering contract
+    (streaming/keyed.py)."""
     ev = events_file_replay(spark, sf_dir).select(
         "user_id", "ts", "event_id", F.expr(ANOMALY_VI_EXPR).alias("vi")
     )
@@ -1992,59 +1720,34 @@ def ewma_stream(ev: DataFrame) -> DataFrame:
     ListState sliding buffer — and every arriving event emits its
     binary-decay weighted trailing average as exact integers.  Input:
     a streaming frame with (user_id, ts, event_id, vi_micro)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from flink_streaming_example_spark.operators.timeseries import _EWMA_SPAN
 
-    def smooth(key, pdfs, state: GroupState):
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
-        ids, nums, dens = [], [], []
-        # whole-group sort across ALL Arrow chunks (r10 ADVICE): a
-        # per-chunk sort is arbitrary across chunk boundaries
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-            for eid, x in zip(pdf["event_id"], pdf["vi_micro"]):
-                buf.append(int(x))
-                if len(buf) > _EWMA_SPAN:
-                    buf.pop(0)
-                m = len(buf)
-                num = sum(
-                    v << (_EWMA_SPAN - m + j) for j, v in enumerate(buf)
-                )
-                ids.append(int(eid))
-                nums.append(num)
-                dens.append((1 << _EWMA_SPAN) - (1 << (_EWMA_SPAN - m)))
+    def smooth(user_id, prev, rows):
+        buf = list(prev[0]) if prev else []
+        out = []
+        for eid, x in zip(rows["event_id"], rows["vi_micro"]):
+            buf.append(x)
+            if len(buf) > _EWMA_SPAN:
+                buf.pop(0)
+            m = len(buf)
+            num = sum(v << (_EWMA_SPAN - m + j) for j, v in enumerate(buf))
+            den = (1 << _EWMA_SPAN) - (1 << (_EWMA_SPAN - m))
+            out.append((user_id, eid, num, den))
         # persist only the last _EWMA_SPAN-1 values: a retained
         # _EWMA_SPAN-th (oldest) slot would always be popped before
         # contributing to the next emission — one dead value per key
         # (round-9 advisor).  Emission math is unchanged: the next
         # append refills the buffer to the same _EWMA_SPAN values.
-        state.update((buf[-(_EWMA_SPAN - 1):],))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(ids),
-                "event_id": ids,
-                "ewma_num_micro": nums,
-                "ewma_den": dens,
-            }
-        )
+        return (buf[-(_EWMA_SPAN - 1):],), out
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        smooth,
-        outputStructType=(
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "vi_micro"),
+        per_user(smooth, "buf array<bigint>"),
+        output=(
             "user_id long, event_id long, ewma_num_micro long, ewma_den long"
         ),
-        stateStructType="buf array<bigint>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        order=("ts", "event_id"),
     )
-
-
-# micro-scaling of value, JVM-side (exact: DECIMAL(30,6) * 10^6 is
-# integral by construction)
 EWMA_VI_EXPR = (
     "CAST(CAST(CAST(value AS STRING) AS DECIMAL(30,6)) * 1000000 AS BIGINT)"
 )
@@ -2170,41 +1873,24 @@ def funnel_stream(ev: DataFrame) -> DataFrame:
     strict `>`: a next-step event at the SAME µs as the stage's
     completion fails `t_us > t` whichever side of the intra-batch sort
     it lands on.  State per user is two BIGINTs + a seq — constant,
-    watermark-free; prefix-order across batches needs time-ordered
-    shards (anomaly kernel's contract; multibatch-tested)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    watermark-free."""
     steps = {s: i + 1 for i, s in enumerate(_FUNNEL_STEP_NAMES)}
 
-    def advance(key, pdfs, state: GroupState):
-        (user_id,) = key
-        stage, t, seq = state.get if state.exists else (0, -1, 0)
-        stage, t, seq = int(stage), int(t), int(seq)
-        # whole-group sort across ALL Arrow chunks (r10 ADVICE)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["t_us", "event_id"])
-            for et, tu in zip(pdf["event_type"], pdf["t_us"]):
-                want = steps.get(et)
-                if want == stage + 1 and (stage == 0 or int(tu) > t):
-                    stage, t = want, int(tu)
+    def advance(user_id, prev, rows):
+        stage, t, seq = prev or (0, -1, 0)
+        for et, tu in zip(rows["event_type"], rows["t_us"]):
+            want = steps.get(et)
+            if want == stage + 1 and (stage == 0 or tu > t):
+                stage, t = want, tu
         seq += 1
-        state.update((stage, t, seq))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "stage": [stage],
-                "batch_seq": [seq],
-            }
-        )
+        return (stage, t, seq), [(user_id, stage, seq)]
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        advance,
-        outputStructType="user_id long, stage long, batch_seq long",
-        stateStructType="stage long, t long, seq long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ev.select("user_id", "event_id", "event_type", "t_us"),
+        per_user(advance, "stage long, t long, seq long"),
+        output="user_id long, stage long, batch_seq long",
+        order=("t_us", "event_id"),
+        mode="update",
     )
 
 
@@ -2284,42 +1970,23 @@ def transitions_stream(ev: DataFrame) -> DataFrame:
     state is ONE string (the type of the latest event seen), and each
     arriving event emits the (prev → next) edge it completes.  Input:
     a streaming frame with (user_id, ts, event_id, event_type)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def link(key, pdfs, state: GroupState):
-        (user_id,) = key
-        last = state.get[0] if state.exists else None
-        ids, prevs, nexts = [], [], []
-        # whole-group sort across ALL Arrow chunks (r10 ADVICE)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-            for eid, etype in zip(pdf["event_id"], pdf["event_type"]):
-                if last is not None:
-                    ids.append(int(eid))
-                    prevs.append(last)
-                    nexts.append(str(etype))
-                last = str(etype)
-        if last is not None:
-            state.update((last,))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(ids),
-                "event_id": ids,
-                "prev_type": prevs,
-                "next_type": nexts,
-            }
-        )
+    def link(user_id, prev, rows):
+        last = prev[0] if prev else None
+        out = []
+        for eid, etype in zip(rows["event_id"], rows["event_type"]):
+            if last is not None:
+                out.append((user_id, eid, last, etype))
+            last = etype
+        return (last,), out
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        link,
-        outputStructType=(
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "event_type"),
+        per_user(link, "last_type string"),
+        output=(
             "user_id long, event_id long, prev_type string, next_type string"
         ),
-        stateStructType="last_type string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        order=("ts", "event_id"),
     )
 
 
@@ -2337,10 +2004,7 @@ def q_streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once); the batch aggregation to a transition MATRIX is
     q_path_transitions — this key keeps the edge log, which is what a
     downstream sessionizer or CEP stage would consume.  State per key
-    is one short string — constant, watermark-free; prefix order
-    across batches is preserved by the time-ordered replay exactly as
-    in q_streaming_anomaly (multibatch shards sort by (ts, event_id)
-    within each batch)."""
+    is one short string — constant, watermark-free."""
     ev = events_file_replay(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -2377,37 +2041,17 @@ def first_seen_stream(ev: DataFrame) -> DataFrame:
     a watermark-delayed emission (emit on timeout, not first sight)
     instead of this kernel.  events_file_replay satisfies the contract
     by construction (time-aligned shards)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def first_seen(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            for _ in pdfs:
-                pass
-            yield pd.DataFrame({"user_id": [], "first_day": []}).astype(
-                {"user_id": "int64", "first_day": "int64"}
-            )
-            return
-        lo = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf["day"].min())
-                lo = m if lo is None else min(lo, m)
-        if lo is None:
-            yield pd.DataFrame({"user_id": [], "first_day": []}).astype(
-                {"user_id": "int64", "first_day": "int64"}
-            )
-            return
-        state.update((lo,))
-        yield pd.DataFrame({"user_id": [user_id], "first_day": [lo]})
+    def first_seen(user_id, prev, rows):
+        if prev is not None:
+            return prev, []
+        lo = min(rows["day"])
+        return (lo,), [(user_id, lo)]
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        first_seen,
-        outputStructType="user_id long, first_day long",
-        stateStructType="first_day long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ev.select("user_id", "day"),
+        per_user(first_seen, "first_day long"),
+        output="user_id long, first_day long",
     )
 
 
@@ -2426,8 +2070,7 @@ def q_streaming_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-appearance log (per-DAY cardinality — driver-scale, the
     same post-drain batch composition as q_streaming_funnel).  The
     time-ordered replay makes the batch-min first day exact (a key's
-    first batch contains its earliest events — the same prefix
-    argument as q_streaming_anomaly)."""
+    first batch contains its earliest events)."""
     ev = events_file_replay(spark, sf_dir).select(
         "user_id",
         F.expr(
@@ -2467,38 +2110,18 @@ def first_seen_robust_stream(ev: DataFrame) -> DataFrame:
     (q_streaming_funnel, q_streaming_stratified_sample) and is robust
     to UNBOUNDED disorder, which a watermark-delayed variant is not.
     State: two longs per key — constant, watermark-free."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def fold_min(key, pdfs, state: GroupState):
-        (user_id,) = key
-        lo, seq = state.get if state.exists else (None, 0)
-        lo = None if lo is None else int(lo)
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf["day"].min())
-                lo = m if lo is None else min(lo, m)
-        seq = int(seq) + 1
-        if lo is None:
-            yield pd.DataFrame(
-                {"user_id": [], "first_day": [], "batch_seq": []}
-            ).astype("int64")
-            return
-        state.update((lo, seq))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "first_day": [lo],
-                "batch_seq": [seq],
-            }
-        )
+    def fold_min(user_id, prev, rows):
+        lo, seq = min(rows["day"]), 1
+        if prev is not None:
+            lo, seq = min(lo, prev[0]), prev[1] + 1
+        return (lo, seq), [(user_id, lo, seq)]
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fold_min,
-        outputStructType="user_id long, first_day long, batch_seq long",
-        stateStructType="first_day long, batch_seq long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ev.select("user_id", "day"),
+        per_user(fold_min, "first_day long, batch_seq long"),
+        output="user_id long, first_day long, batch_seq long",
+        mode="update",
     )
 
 
@@ -2552,57 +2175,37 @@ def cusum_stream(ev: DataFrame) -> DataFrame:
     (user_id, ts, event_id, d) where d is the micro-scaled deviation
     value*1e6 - CUSUM_K.  Constant state per key: six longs,
     watermark-free — the Flink ValueState shape."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from flink_streaming_example_spark.operators.timeseries import CUSUM_H
 
-    def judge(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            pp, mp, rn, alarms, first_rn, max_s = (
-                int(v) for v in state.get
-            )
-        else:
-            pp, mp, rn, alarms, first_rn, max_s = 0, 0, 0, 0, -1, 0
-        # whole-group sort across ALL Arrow chunks (r10 ADVICE)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-            for d in (int(v) for v in pdf["d"]):
-                rn += 1
-                pp += d
-                mp = min(mp, pp)
-                s = pp - mp  # mp already folds in P_0 = 0
-                if s > CUSUM_H:
-                    alarms += 1
-                    if first_rn < 0:
-                        first_rn = rn
-                if s > max_s:
-                    max_s = s
-        state.update((pp, mp, rn, alarms, first_rn, max_s))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [rn],
-                "n_alarms": [alarms],
-                "first_alarm_rn": [first_rn],
-                "max_s": [max_s],
-            }
-        )
+    def judge(user_id, prev, rows):
+        pp, mp, rn, alarms, first_rn, max_s = prev or (0, 0, 0, 0, -1, 0)
+        for d in rows["d"]:
+            rn += 1
+            pp += d
+            mp = min(mp, pp)
+            s = pp - mp  # mp already folds in P_0 = 0
+            if s > CUSUM_H:
+                alarms += 1
+                if first_rn < 0:
+                    first_rn = rn
+            if s > max_s:
+                max_s = s
+        return (pp, mp, rn, alarms, first_rn, max_s), [
+            (user_id, rn, alarms, first_rn, max_s)
+        ]
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        judge,
-        outputStructType=(
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "d"),
+        per_user(
+            judge,
+            "pp long, mp long, rn long, alarms long, first_rn long, max_s long",
+        ),
+        output=(
             "user_id long, n_events long, n_alarms long,"
             " first_alarm_rn long, max_s long"
         ),
-        stateStructType=(
-            "pp long, mp long, rn long, alarms long,"
-            " first_rn long, max_s long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        order=("ts", "event_id"),
+        mode="update",
     )
 
 
@@ -2623,9 +2226,7 @@ def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a buffer.  Deviations are micro-scaled JVM-side before the
     Python kernel; update-mode emission keeps the per-key summary
     current every batch and the bounded replay's final rows
-    hash-match the batch oracle verbatim (same prefix-order argument
-    as q_streaming_anomaly; multibatch-tested over time-split
-    shards)."""
+    hash-match the batch oracle verbatim."""
     from flink_streaming_example_spark.operators.timeseries import CUSUM_K
 
     ev = events_file_replay(spark, sf_dir).select(
@@ -2800,51 +2401,26 @@ def attribution_stream(ev: DataFrame) -> DataFrame:
     each purchase emits its attribution row at arrival, credited to
     the state (or -1 when no click has preceded it).  Input: a
     streaming frame with (user_id, ts, event_id, event_type, day,
-    vi).  State is constant-size per key and watermark-free; the
-    first-click identity relies on the same time-ordered-replay
-    prefix contract as first_seen_stream (documented there)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    vi).  State is constant-size per key and watermark-free."""
 
-    def attrib(key, pdfs, state: GroupState):
-        (user_id,) = key
-        first_click = state.get[0] if state.exists else None
-        days, vis = [], []
-        # Concatenate ALL Arrow chunks before sorting (the repo-wide
-        # whole-group idiom): a per-chunk sort would give arbitrary
-        # cross-chunk order once a key's micro-batch rows span more
-        # than one Arrow record batch, letting a purchase process
-        # before an earlier-ts click in the same batch (r10 ADVICE).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-            for etype, d, vi in zip(
-                pdf["event_type"], pdf["day"], pdf["vi"]
-            ):
-                if etype == "click":
-                    if first_click is None:
-                        first_click = int(d)
-                elif etype == "purchase":
-                    days.append(
-                        first_click if first_click is not None else -1
-                    )
-                    vis.append(int(vi))
-        if first_click is not None:
-            state.update((int(first_click),))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(days),
-                "attrib_day": days,
-                "vi": vis,
-            }
-        )
+    def attrib(user_id, prev, rows):
+        first_click = prev[0] if prev else None
+        out = []
+        for etype, d, vi in zip(rows["event_type"], rows["day"], rows["vi"]):
+            if etype == "click":
+                if first_click is None:
+                    first_click = d
+            elif etype == "purchase":
+                out.append(
+                    (user_id, -1 if first_click is None else first_click, vi)
+                )
+        return (None if first_click is None else (first_click,)), out
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        attrib,
-        outputStructType="user_id long, attrib_day long, vi long",
-        stateStructType="first_click_day long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ev.select("user_id", "ts", "event_id", "event_type", "day", "vi"),
+        per_user(attrib, "first_click_day long"),
+        output="user_id long, attrib_day long, vi long",
+        order=("ts", "event_id"),
     )
 
 

@@ -161,6 +161,10 @@ def test_same_instant_order_is_distance_zero_on_both_sides(spark):
     assert str(f.next_order_date) == "2024-01-10 12:00:00"
 
 
+# odd and above 2^53: float64 cannot represent it
+BIG_ID = 2**53 + 1
+
+
 def _drain_stream(spark, sdf, name):
     import tempfile
 
@@ -181,7 +185,9 @@ def test_streaming_nearest_tie_and_timeout_fallback(spark):
     boundaries the batch path gets: an exactly-equidistant event must
     take the EARLIER date (backward), and a trailing event with no
     later order must resolve to its backward snapshot from the
-    end-of-input timer — not be dropped."""
+    end-of-input timer — not be dropped.  One event id lies above
+    2^53, where a float64 round trip would change it: ids must reach
+    the output exact."""
     import tempfile
     from datetime import datetime, timezone
 
@@ -194,7 +200,11 @@ def test_streaming_nearest_tie_and_timeout_fallback(spark):
     ev_dir = tempfile.mkdtemp(prefix="asofties_ev_")
     ord_dir = tempfile.mkdtemp(prefix="asofties_ord_")
     spark.createDataFrame(
-        [(1, "2024-01-10 12:00:00", 10), (2, "2024-01-20 00:00:00", 10)],
+        [
+            (1, "2024-01-10 12:00:00", 10),
+            (2, "2024-01-20 00:00:00", 10),
+            (BIG_ID, "2024-01-10 18:00:00", 10),
+        ],
         "event_id long, ts string, user_id long",
     ).select(
         "event_id", F.col("ts").cast("timestamp_ntz").alias("ts"), "user_id"
@@ -239,6 +249,11 @@ def test_streaming_nearest_tie_and_timeout_fallback(spark):
         int(datetime(2024, 1, 11, tzinfo=timezone.utc).timestamp()) * us,
         9 * 24 * 3600 * us,
     )
+    # the >2^53 id: 6h before the later order, 18h after the earlier
+    assert got[BIG_ID] == (
+        int(datetime(2024, 1, 11, tzinfo=timezone.utc).timestamp()) * us,
+        6 * 3600 * us,
+    )
 
     u2 = asof_union_stream(
         spark.readStream.schema(
@@ -259,3 +274,4 @@ def test_streaming_nearest_tie_and_timeout_fallback(spark):
         datetime(2024, 1, 11, tzinfo=timezone.utc).timestamp()
     ) * us
     assert fwd[2] is None
+    assert fwd[BIG_ID] == fwd[1]

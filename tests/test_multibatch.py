@@ -87,33 +87,26 @@ def test_windowed_agg_across_micro_batches(spark, sharded_events_dir):
 
 
 def test_stateful_counter_accumulates_across_batches(spark, sharded_events_dir):
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def count_events(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
+    from flink_streaming_example_spark.streaming.queries import counter_stream
 
     ev = _replay(spark, sharded_events_dir).select("user_id", "event_type")
-    counted = ev.groupBy("user_id").applyInPandasWithState(
-        count_events,
-        outputStructType="user_id long, n_events long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got, batches = _drain(spark, counted, "update")
+    got, batches = _drain(spark, counter_stream(ev), "update")
     assert batches >= N_SHARDS
     # update mode emits one row per key per batch it appears in; the
     # MAX per key is the final accumulated count
-    final = got.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
+    final = got.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("n_errors").alias("n_errors"),
+    )
     want = (
         load_table(spark, SF_DIR, "events")
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum((F.col("event_type") == "error").cast("long")).alias(
+                "n_errors"
+            ),
+        )
     )
     result = compare_frames(final.toPandas(), want.toPandas())
     assert result.ok, result.detail
@@ -1027,6 +1020,154 @@ def test_streaming_anomaly_prefix_order_across_batches(spark):
         F.sum(flag.cast("long")).alias("n_anomalies"),
     )
     result = compare_frames(final.toPandas(), want.toPandas())
+    assert result.ok, result.detail
+
+
+def test_streaming_ewma_across_batches(spark):
+    """q_streaming_ewma's trailing buffer must carry a key's last
+    values across micro-batches: an event early in batch n+1 averages
+    over batch n's tail.  Expected = the batch q_ewma frame over the
+    same events."""
+    import os
+
+    from flink_streaming_example_spark.plans.registry import all_specs
+    from flink_streaming_example_spark.streaming.queries import (
+        EWMA_VI_EXPR,
+        ewma_stream,
+    )
+
+    ev = load_table(spark, SF_DIR, "events")
+    bounds = list(
+        ev.selectExpr(
+            "min(ts) AS a", "timestamp'2024-01-08' AS b",
+            "timestamp'2024-01-15' AS c", "timestamp'2024-01-22' AS d",
+            "max(ts) AS e"
+        ).collect()[0]
+    )
+    out_dir = tempfile.mkdtemp(prefix="ewma_shards_")
+    _write_time_aligned_shards(ev, "ts", bounds, out_dir)
+    assert len(os.listdir(out_dir)) == len(bounds) - 1
+
+    stream = _replay(spark, out_dir).select(
+        "user_id", "ts", "event_id", F.expr(EWMA_VI_EXPR).alias("vi_micro")
+    )
+    got, batches = _drain(spark, ewma_stream(stream), "append")
+    assert batches >= len(bounds) - 1
+    want = all_specs()["q_ewma"].fn(spark, SF_DIR)
+    result = compare_frames(got.toPandas(), want.toPandas())
+    assert result.ok, result.detail
+
+
+def _inactivity_alerts_per_key(events, shard_of, n_shards, timeout_ms):
+    """Spark's per-key EventTimeTimeout contract, replayed in plain
+    Python over a shard layout: batch k's watermark is the ms-truncated
+    max event time of batches < k; a key with data in a batch re-arms
+    its timer at last-seen + timeout (or loses it when the batch does
+    not advance last-seen); a key WITHOUT data fires once its timer is
+    below the watermark, emits its last-seen and drops its state.  A
+    final no-data batch runs at the global watermark."""
+    state: dict = {}  # user -> [last_us, timer_ms or None]
+    alerts = []
+    wm, seen_us = 0, None
+    for k in list(range(n_shards)) + [None]:
+        batch = events[shard_of == k] if k is not None else events[:0]
+        present = set()
+        for user, grp in batch.groupby("user_id"):
+            present.add(user)
+            max_us = int(grp["us"].max())
+            prev = state.get(user)
+            if prev is None or max_us > prev[0]:
+                state[user] = [max_us, max_us // 1000 + timeout_ms]
+            else:
+                prev[1] = None
+        for user in sorted(state):
+            last_us, timer = state[user]
+            if user not in present and timer is not None and timer < wm:
+                alerts.append((user, last_us))
+                del state[user]
+        if len(batch):
+            top = int(batch["us"].max())
+            seen_us = top if seen_us is None else max(seen_us, top)
+            wm = seen_us // 1000
+    return alerts
+
+
+def test_inactivity_alert_across_batches(spark, sf_dir):
+    """q_inactivity_alert's timers must fire exactly as Spark's per-key
+    EventTimeTimeout does across micro-batches: a user absent from a
+    batch whose watermark passed last-seen + 12 h alerts MID-stream,
+    drops its state, and may come back and alert again.  Two-day shards
+    of the suite's default sf0.01 corpus (150 users) make both happen
+    often, and put many users in each key group.  Expected = the per-key timer contract replayed in
+    Python over the same shard layout."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+
+    from flink_streaming_example_spark.streaming.queries import (
+        inactivity_stream,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    days = [f"timestamp'2024-01-{d:02d}'" for d in range(3, 30, 2)]
+    bounds = list(
+        ev.selectExpr(
+            "min(ts)", *[f"{d} AS d{i}" for i, d in enumerate(days)], "max(ts)"
+        ).collect()[0]
+    )
+    out_dir = tempfile.mkdtemp(prefix="inactivity_shards_")
+    _write_time_aligned_shards(ev, "ts", bounds, out_dir)
+    assert len(os.listdir(out_dir)) == len(bounds) - 1
+
+    stream = _replay(spark, out_dir).select("user_id", "ts")
+    got, batches = _drain(spark, inactivity_stream(stream), "append")
+    assert batches >= len(bounds) - 1
+
+    pdf = ev.select("user_id", "ts").toPandas()
+    pdf["us"] = pdf["ts"].astype("datetime64[us]").astype(np.int64)
+    edges = pd.Series(bounds[1:-1]).astype("datetime64[us]").to_numpy()
+    shard_of = np.searchsorted(edges, pdf["ts"].to_numpy(), side="right")
+    alerts = _inactivity_alerts_per_key(
+        pdf, shard_of, len(bounds) - 1, 12 * 3600 * 1000
+    )
+    want = pd.DataFrame(alerts, columns=["user_id", "last_seen_us"])
+    # the layout must exercise mid-stream firing and returning users
+    assert want["user_id"].duplicated().any()
+    result = compare_frames(got.toPandas(), want)
+    assert result.ok, result.detail
+
+
+def test_cep_groups_spanning_many_arrow_batches(spark, time_ordered_shards_dir):
+    """With a tiny spark.sql.execution.arrow.maxRecordsPerBatch every
+    keyed group's rows reach the Python worker in many Arrow chunks, so
+    the kernel must concatenate ALL chunks before its (ts, event_id)
+    sort — a per-chunk sort lets a purchase run ahead of an earlier
+    click.  Multi-batch replay, checked against the batch funnel."""
+    from flink_streaming_example_spark.plans.registry import all_specs
+    from flink_streaming_example_spark.streaming.queries import (
+        cep_funnel_stream,
+    )
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        matched = cep_funnel_stream(_replay(spark, time_ordered_shards_dir))
+        got, batches = _drain(spark, matched, "append")
+    finally:
+        spark.conf.set(conf, prev)
+    assert batches >= N_SHARDS
+    got = got.select(
+        "user_id",
+        "purchase_id",
+        *[
+            F.col(c).cast("timestamp_ntz").alias(c)
+            for c in ("last_click_ts", "last_view_ts", "purchase_ts")
+        ],
+    )
+    want = all_specs()["q_cep_funnel"].fn(spark, SF_DIR)
+    result = compare_frames(got.toPandas(), want.toPandas())
     assert result.ok, result.detail
 
 

@@ -1,8 +1,9 @@
-"""Capture .explain('formatted') for a set of keys into plans/r16/.
+"""Capture .explain('formatted') for a set of keys into OUT_DIR.
 
-Usage: python tools/dump_r16_plans.py before q_a,q_b[,...]
-       python tools/dump_r16_plans.py after  q_a,q_b[,...]
+Usage: python tools/dump_key_plans.py OUT_DIR before q_a,q_b[,...]
+       python tools/dump_key_plans.py OUT_DIR after  q_a,q_b[,...]
 
+Each key's plan goes to OUT_DIR/<key>_<suffix>.txt.
 Batch keys: the returned DataFrame's formatted plan.  Streaming keys
 (the frame comes back from a memory sink): the captured incremental
 plan of the final micro-batch (streaming/queries._CAPTURE_STREAMING_PLANS),
@@ -20,14 +21,12 @@ from flink_streaming_example_spark.plans.registry import all_specs
 from flink_streaming_example_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r16")
 
 
 def main() -> None:
-    suffix, keys = sys.argv[1], sys.argv[2].split(",")
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark("dump-r16-plans")
+    out, suffix, keys = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark("dump-key-plans")
     specs = all_specs()
     from flink_streaming_example_spark.streaming import queries as sq
     from flink_streaming_example_spark.operators import pinning
@@ -48,7 +47,7 @@ def main() -> None:
             sq._CAPTURE_STREAMING_PLANS = False
             spark.catalog.clearCache()
             pinning.release_all()
-        path = os.path.join(OUT, f"{key}_{suffix}.txt")
+        path = os.path.join(out, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {key} ({suffix}) sf={SF_DIR}\n\n{text}\n")
         print("WROTE", path, flush=True)
