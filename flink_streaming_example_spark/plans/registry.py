@@ -13,7 +13,15 @@ before hashing.
 
 from __future__ import annotations
 
+import ast
+import glob
+import hashlib
 import importlib
+import json
+import os
+import re
+import subprocess
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -94,11 +102,6 @@ def _verification_history() -> dict[str, tuple[int, bool]]:
     of 81 keys), so a static ordering would leave the tail permanently
     unverified.  We rotate instead: see all_specs().
     """
-    import glob
-    import json
-    import os
-    import re
-
     root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
@@ -131,144 +134,127 @@ def _verification_history() -> dict[str, tuple[int, bool]]:
     return seen
 
 
-# ---- derived reverification (round 6): keys whose implementation
-# changed AFTER their latest green driver check jump the rotation like
-# an explicitly-recorded failure does.  Previously a hand-curated map —
-# forgetting to add a key after a rewrite silently demoted it (exactly
-# the gap the round-5 as-of rewrite exposed); now DERIVED from git:
-# a key is stale iff the source closure of its query function (the
-# function plus every module-level helper it references, fixed-point
-# within its module) differs between the current tree and the module's
-# blob at the commit that added CORRECTNESS_r{R}.json for its latest
-# green round R.  Limitations (deliberate): cross-module helpers are
-# out of scope (the module is the unit of review), and a repo without
-# git history degrades to an empty map — same as the old default.
+# ---- derived reverification: keys whose implementation changed AFTER
+# their latest green driver check jump the rotation like a recorded
+# failure does.  DERIVED from git, not hand-curated (a forgotten entry
+# silently demoted a rewritten key): a key is stale iff the source
+# closure of its query function -- the function plus every module-level
+# def / assignment it references, fixed-point within its module --
+# differs between the current tree and the module's blob at the commit
+# of CORRECTNESS_r{R}.json for its latest green round R.  Each source is
+# indexed ONCE (one ast.parse, one line split) and a key's hash is a
+# walk over its index.  Contract: every segment is byte-identical to
+# ast.get_source_segment's (UTF-8 byte columns; lines end at \r, \n or
+# \r\n only, as ast._splitlines_no_ff splits -- never at \x0c or
+# \u2028), so hashes stay comparable across rounds.  Limitations
+# (deliberate): cross-module helpers are out of scope (the module is the
+# unit of review), and a repo without git history yields an empty map.
+
+_SOURCE_LINE = re.compile(r"[^\r\n]*(?:\r\n?|\n)|[^\r\n]+\Z")
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _function_closure_hash(source: str, root_fn: str) -> str | None:
-    """Hash of root_fn's definition plus every module-level def /
-    assignment it (transitively) references by name — docstring and
-    comment changes count on purpose: a claim about behavior is part
-    of what the judge and the driver verified."""
-    import ast
-    import hashlib
+@dataclass(frozen=True)
+class _SourceIndex:
+    segments: dict[str, str]  # top-level name -> hashed source text
+    refs: dict[str, set[str]]  # name -> top-level names it references
+    wrappers: dict[str, str]  # nested def name -> enclosing top-level def
 
+
+def _index_source(source: str) -> _SourceIndex | None:
     try:
         tree = ast.parse(source)
     except SyntaxError:
         return None
-    segments: dict[str, str] = {}
-    # TOP-LEVEL defs only (tree.body, not ast.walk): nested defs are
-    # already part of their parent's source segment, and collecting
-    # them as referenceable names lets an unrelated function's LOCAL
-    # variable collide with some other function's nested-helper name —
-    # a false-positive staleness flag that burns driver rotation budget
-    # (observed round 7: a nested `frame` helper flagged q_streaming_cep).
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            seg = ast.get_source_segment(source, node)
-            # get_source_segment starts at `def` — decorators are NOT
-            # included, yet that's where oracle constants are referenced
-            # (@register("k", oracle=_SQL)); append them so an oracle
-            # edit changes the hash and flags the key.
-            decs = [
-                d
-                for d in (
-                    ast.get_source_segment(source, dec)
-                    for dec in node.decorator_list
-                )
-                if d
-            ]
-            if seg and node.name not in segments:
-                segments[node.name] = "\n".join([*decs, seg])
-    for node in tree.body:
-        # Assign covers `X = ...` and `A, B = ...` (Tuple/List targets);
-        # AnnAssign covers `X: str = ...` — all referenceable names a
-        # query function can close over (round-6 advisor: annotated and
-        # tuple-unpacked constants were invisible, so editing such an
-        # oracle constant wouldn't flag its key stale).
-        if isinstance(node, (ast.Assign, ast.AnnAssign)):
-            seg = ast.get_source_segment(source, node)
-            if not seg:
-                continue
-            targets = (
-                node.targets if isinstance(node, ast.Assign) else [node.target]
-            )
-            for tgt in targets:
-                if isinstance(tgt, ast.Name):
-                    segments.setdefault(tgt.id, seg)
-                elif isinstance(tgt, (ast.Tuple, ast.List)):
-                    for elt in tgt.elts:
-                        if isinstance(elt, ast.Name):
-                            segments.setdefault(elt.id, seg)
-    if root_fn not in segments:
-        # Keys registered inside a module-level `_register()` wrapper
-        # (the streaming modules' import-side-effect pattern) have no
-        # top-level def of their own — hash the ENCLOSING top-level
-        # function instead (its source segment contains the nested
-        # registered fn, its decorator, and the wrapper's own locals).
-        # Round-14: q_streaming_ppjoin's rewrite was invisible to the
-        # draw because this case silently returned None — a changed
-        # key that never flags stale defeats the rotation's tier 2.
-        # Round-15 (ADVICE): the match prefers nested defs that carry
-        # a register(...) decorator — a bare-name match could hit an
-        # unrelated function's LOCAL helper that happens to share the
-        # registered fn's name (the round-7 collision class, one level
-        # down).  The undecorated bare-name scan stays as a fallback so
-        # an exotic registration style degrades to the round-14 rule
-        # rather than back to the silent None.
-        def _wrapper_of(require_register_decorator: bool) -> str | None:
-            for node in tree.body:
-                if not isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef)
-                ):
-                    continue
-                for sub in ast.walk(node):
-                    if (
-                        isinstance(
-                            sub, (ast.FunctionDef, ast.AsyncFunctionDef)
-                        )
-                        and sub.name == root_fn
-                        and (
-                            not require_register_decorator
-                            or any(
-                                "register"
-                                in (
-                                    ast.get_source_segment(source, dec)
-                                    or ""
-                                )
-                                for dec in sub.decorator_list
-                            )
-                        )
-                    ):
-                        return node.name
-            return None
+    lines = _SOURCE_LINE.findall(source)
 
-        wrapper = _wrapper_of(True) or _wrapper_of(False)
-        if wrapper is not None:
-            root_fn = wrapper
-    if root_fn not in segments:
-        return None
+    def cut(node: ast.AST) -> str:
+        first, last = node.lineno - 1, node.end_lineno - 1
+        head = lines[first].encode()
+        if first == last:
+            return head[node.col_offset : node.end_col_offset].decode()
+        return (
+            head[node.col_offset :].decode()
+            + "".join(lines[first + 1 : last])
+            + lines[last].encode()[: node.end_col_offset].decode()
+        )
+
+    # TOP-LEVEL names only (tree.body, not ast.walk): nested defs are
+    # already part of their parent's segment, and collecting them lets
+    # an unrelated function's LOCAL variable collide with another's
+    # nested-helper name -- a false-positive staleness flag that burns
+    # rotation budget (round 7: a nested `frame` flagged q_streaming_cep).
+    # The first def of a name wins, then the first assignment.
+    defs: dict[str, ast.AST] = {}
+    consts: dict[str, ast.AST] = {}
+    # Keys registered inside a module-level `_register()` wrapper (the
+    # streaming modules' pattern) have no top-level def: they hash as
+    # the ENCLOSING def, whose segment holds the nested fn, its
+    # decorator and the wrapper's locals (round 14: a silent None hid
+    # q_streaming_ppjoin's rewrite).  Nested defs carrying a register
+    # decorator match first -- a bare name could hit an unrelated
+    # function's LOCAL helper -- and bare names stay the fallback, so
+    # an exotic registration style still hashes rather than give None.
+    registered: dict[str, str] = {}
+    bare: dict[str, str] = {}
+    names: dict[ast.AST, set[str]] = {}  # node -> every Name it references
+    for node in tree.body:
+        if isinstance(node, _DEFS):
+            defs.setdefault(node.name, node)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            # `X = ...`, `A, B = ...` and `X: str = ...` are all
+            # constants a query can close over (oracle SQL among them).
+            tgts = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for tgt in tgts:
+                for elt in getattr(tgt, "elts", [tgt]):
+                    if isinstance(elt, ast.Name):
+                        consts.setdefault(elt.id, node)
+        else:
+            continue
+        names[node] = set()
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                names[node].add(sub.id)
+            elif isinstance(sub, _DEFS):  # assignments hold no defs
+                bare.setdefault(sub.name, node.name)
+                if any("register" in cut(d) for d in sub.decorator_list):
+                    registered.setdefault(sub.name, node.name)
+    nodes = {**consts, **defs}
+    # A def's segment starts at `def`; its decorators are prepended, as
+    # that is where oracle constants are referenced (@register("k",
+    # oracle=_SQL)), so an oracle edit flags the key.
+    segments = {
+        name: "\n".join([*map(cut, getattr(node, "decorator_list", [])), cut(node)])
+        for name, node in nodes.items()
+    }
+    refs = {name: names[node] & segments.keys() for name, node in nodes.items()}
+    return _SourceIndex(segments, refs, {**bare, **registered})
+
+
+def _closure_hash(index: _SourceIndex, root_fn: str) -> str | None:
+    """Hash of root_fn's segment plus every top-level segment it
+    (transitively) references -- docstring and comment changes count on
+    purpose: a claim about behavior is part of what was verified."""
+    if root_fn not in index.segments:
+        root_fn = index.wrappers.get(root_fn, root_fn)
+        if root_fn not in index.segments:
+            return None
     included = {root_fn}
     frontier = [root_fn]
     while frontier:
-        name = frontier.pop()
-        refs = {
-            n.id
-            for n in ast.walk(ast.parse(segments[name]))
-            if isinstance(n, ast.Name)
-        }
-        for ref in refs & set(segments):
-            if ref not in included:
-                included.add(ref)
-                frontier.append(ref)
-    blob = "\n".join(segments[n] for n in sorted(included))
+        for ref in index.refs[frontier.pop()] - included:
+            included.add(ref)
+            frontier.append(ref)
+    blob = "\n".join(index.segments[n] for n in sorted(included))
     return hashlib.sha256(blob.encode()).hexdigest()
 
 
-def _git(root: str, *args: str) -> str | None:
-    import subprocess
+def _function_closure_hash(source: str, root_fn: str) -> str | None:
+    index = _index_source(source)
+    return None if index is None else _closure_hash(index, root_fn)
 
+
+def _git(root: str, *args: str) -> str | None:
     try:
         out = subprocess.run(
             ["git", *args], cwd=root, capture_output=True, text=True,
@@ -285,16 +271,16 @@ def compute_must_reverify(
     """{key: latest-green-round} for keys whose code is newer than that
     green.  ``git`` is injectable so tests can pin the derivation
     without fixture repos."""
-    import os
-    import sys
-
     root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     hist = _verification_history()
     reg = registry if registry is not None else _REGISTRY
     round_commit: dict[int, str | None] = {}
-    old_hash_cache: dict[tuple[str, str], str | None] = {}
+    # One index per distinct source: per module file, and per
+    # (commit, path) blob.  None = unreadable, missing or unparsable.
+    new_index: dict[str, _SourceIndex | None] = {}
+    old_index: dict[tuple[str, str], _SourceIndex | None] = {}
     stale: dict[str, int] = {}
     for key, spec in reg.items():
         rec = hist.get(key)
@@ -320,24 +306,25 @@ def compute_must_reverify(
         mod_file = getattr(mod, "__file__", None)
         if mod_file is None:
             continue
-        rel = os.path.relpath(mod_file, root)
-        cache_key = (commit, rel)
-        if cache_key not in old_hash_cache:
-            old_hash_cache[cache_key] = git(root, "show", f"{commit}:{rel}")
-        old_source = old_hash_cache[cache_key]
-        try:
-            with open(mod_file) as fh:
-                new_source = fh.read()
-        except OSError:
-            continue
+        if mod_file not in new_index:
+            try:
+                with open(mod_file) as fh:
+                    new_index[mod_file] = _index_source(fh.read())
+            except OSError:
+                new_index[mod_file] = None
         fn_name = spec.fn.__name__
-        new_h = _function_closure_hash(new_source, fn_name)
-        old_h = (
-            _function_closure_hash(old_source, fn_name)
-            if old_source is not None
-            else None
-        )
-        if new_h is not None and new_h != old_h:
+        new = new_index[mod_file]
+        new_h = None if new is None else _closure_hash(new, fn_name)
+        if new_h is None:
+            continue
+        rel = os.path.relpath(mod_file, root)
+        if (commit, rel) not in old_index:
+            old_source = git(root, "show", f"{commit}:{rel}")
+            old_index[commit, rel] = (
+                None if old_source is None else _index_source(old_source)
+            )
+        old = old_index[commit, rel]
+        if old is None or _closure_hash(old, fn_name) != new_h:
             stale[key] = rnd
     return stale
 

@@ -6,6 +6,9 @@ fixture repos are needed."""
 
 from __future__ import annotations
 
+import ast
+import hashlib
+
 import pytest
 
 from flink_streaming_example_spark.plans import registry
@@ -141,6 +144,25 @@ def test_closure_hash_wrapper_fallback_prefers_register_decorator():
     assert _function_closure_hash(bare, "q_nested") is not None
 
 
+def test_closure_hash_segments_are_byte_exact():
+    """Segments are the exact text ast.get_source_segment cuts: columns
+    are UTF-8 byte offsets, and only \\r and \\n end a line -- a \\x0c
+    or \\u2028 inside a string literal does not (str.splitlines would
+    split there and shift every later segment)."""
+    src = (
+        "FEED = 'a\x0cb\u2028c'\n"
+        "NOTE = ('plain',\n"
+        "        'naïve — café'); TAIL = 1\n"
+        "def root():\n"
+        "    return FEED, NOTE\n"
+    )
+    tree = ast.parse(src)
+    feed, note, _tail, root = (ast.get_source_segment(src, n) for n in tree.body)
+    assert note.endswith("café')")  # non-ASCII before end_col_offset
+    want = hashlib.sha256("\n".join([feed, note, root]).encode()).hexdigest()
+    assert _function_closure_hash(src, "root") == want
+
+
 def _run(monkeypatch, hist, old_source_by_round):
     """Drive compute_must_reverify with this test file as the module
     source and a fake git serving doctored old blobs."""
@@ -215,6 +237,36 @@ def test_git_unavailable_degrades_to_empty(monkeypatch):
         },
     )
     assert got == {}
+
+
+def test_derivation_parses_each_source_once(monkeypatch):
+    """The derivation is linear in the sources it reads: one ast.parse
+    per distinct source, however many keys share it.  20 keys in one
+    module file, all green in one round -> 2 parses (the current file
+    and its one old blob)."""
+    with open(__file__) as fh:
+        old = fh.read().replace('_HELPER_CONST = "v1"', '_HELPER_CONST = "v0"')
+    fns = (fake_query_changed, fake_query_same)
+    reg = {f"k{i:02d}": QuerySpec(f"k{i:02d}", fns[i % 2], None) for i in range(20)}
+    monkeypatch.setattr(
+        registry, "_verification_history", lambda: {k: (5, True) for k in reg}
+    )
+
+    def fake_git(root, *args):
+        return "commit5\n" if args[0] == "log" else old
+
+    parsed = []
+    real_parse = ast.parse
+
+    def counting_parse(source, *args, **kwargs):
+        parsed.append(source)
+        return real_parse(source, *args, **kwargs)
+
+    monkeypatch.setattr(ast, "parse", counting_parse)
+    got = compute_must_reverify(git=fake_git, registry=reg)
+    monkeypatch.undo()
+    assert got == {k: 5 for k, spec in reg.items() if spec.fn is fake_query_changed}
+    assert len(parsed) == 2, f"{len(parsed)} parses for 2 distinct sources"
 
 
 def test_stale_window_keys_lead_rotation():

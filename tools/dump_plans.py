@@ -1,8 +1,18 @@
-"""Regenerate PLANS.md: formatted physical plans for representative
-queries, annotated with what each plan is supposed to exhibit (the
-properties tests/test_plans.py asserts).  Run from the repo root:
+"""Dump formatted physical plans.  Run from the repo root:
 
-    python tools/dump_plans.py          # writes PLANS.md at sf0.001
+    python tools/dump_plans.py                          # PLANS.md at sf0.001
+    python tools/dump_plans.py OUT_DIR before q_a,q_b[,...]
+    python tools/dump_plans.py OUT_DIR after  q_a,q_b[,...]
+
+With no arguments it regenerates PLANS.md: formatted physical plans for
+representative queries, annotated with what each plan is supposed to
+exhibit (the properties tests/test_plans.py asserts).
+
+With OUT_DIR SUFFIX KEYS each key's plan goes to OUT_DIR/<key>_<suffix>.txt.
+Batch keys: the returned DataFrame's formatted plan.  Streaming keys
+(the frame comes back from a memory sink): the captured incremental
+plan of the final micro-batch (streaming/queries._CAPTURE_STREAMING_PLANS),
+falling back to the memory-table plan.
 """
 
 from __future__ import annotations
@@ -12,7 +22,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from flink_streaming_example_spark.plans.registry import all_specs
 from flink_streaming_example_spark.session import get_spark
@@ -398,7 +409,7 @@ SHOWCASE: tuple[tuple[str, str], ...] = (
 )
 
 
-def main() -> None:
+def dump_showcase() -> None:
     spark = get_spark("plan-dump")
     specs = all_specs()
     out = io.StringIO()
@@ -416,12 +427,49 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out.write(f"\n## {key}\n\n{blurb}\n\n```\n{buf.getvalue()}```\n")
-    with open(
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"),
-        "w",
-    ) as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out.getvalue())
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+
+
+def dump_keys(out: str, suffix: str, keys: list[str]) -> None:
+    from flink_streaming_example_spark.operators import pinning
+    from flink_streaming_example_spark.streaming import queries as sq
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark("plan-dump")
+    specs = all_specs()
+    for key in keys:
+        sq._CAPTURE_STREAMING_PLANS = True
+        sq._captured_streaming.clear()
+        try:
+            df = specs[key].fn(spark, SF_DIR)
+            if sq._captured_streaming:
+                text = "\n\n".join(p for p, _ in sq._captured_streaming)
+            else:
+                text = df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+                )
+        except Exception as ex:  # noqa: BLE001
+            text = f"PLAN CAPTURE FAILED: {ex!r}"
+        finally:
+            sq._CAPTURE_STREAMING_PLANS = False
+            spark.catalog.clearCache()
+            pinning.release_all()
+        path = os.path.join(out, f"{key}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {key} ({suffix}) sf={SF_DIR}\n\n{text}\n")
+        print("WROTE", path, flush=True)
+
+
+def main() -> None:
+    if len(sys.argv) == 1:
+        dump_showcase()
+    elif len(sys.argv) == 4:
+        dump_keys(sys.argv[1], sys.argv[2], sys.argv[3].split(","))
+    else:
+        sys.exit(__doc__)
 
 
 if __name__ == "__main__":
