@@ -33,6 +33,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_example_spark.operators.pinning import _release_checkpoint
 from flink_streaming_example_spark.plans.registry import register
 from flink_streaming_example_spark.sources.tables import load_table
 
@@ -494,21 +495,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cc_min_labels(edges)
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a superseded localCheckpoint's blocks deterministically.
-
-    localCheckpoint persists an internal RDD OUTSIDE the SQL
-    CacheManager, so spark.catalog.clearCache() cannot touch it and
-    the blocks otherwise linger until both Python and JVM GC plus the
-    ContextCleaner happen to run.  The LogicalRDD accessor is internal
-    API — verified on PySpark 4.1; on any failure we fall back to that
-    lazy GC path (correctness is unaffected either way)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def cc_min_labels(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components by iterative min-label propagation over an
     undirected edge list (doc_id_a, doc_id_b) -> (doc_id, cluster_id)
@@ -624,11 +610,18 @@ def cc_large_star_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     doubly-exponentially, so star-shaped components (every node edged
     to its component min) emerge in O(log n) rounds regardless of
     diameter.  Each round is localCheckpointed (constant plan depth;
-    see cc_min_labels on why persist() alone OOMs the planner) and
-    convergence = the oriented edge set reached a fixpoint (counts
-    equal and set difference empty).  Returns the same contract as
-    cc_min_labels: (doc_id, cluster_id = component min) for every
-    node with at least one edge."""
+    see cc_min_labels on why persist() alone OOMs the planner).
+
+    Convergence is the star-forest condition, one aggregate over the
+    round's edge endpoints: no node has two out-edges or is both a
+    source and a destination.  This is exact: a star forest is a
+    fixpoint of both rewrites (each leaf keeps its one edge to its
+    root, each root re-points its larger neighbours to itself), and a
+    fixpoint has every component as a star centred at its minimum
+    (Kiveris et al., SoCC 2014) — so the loop stops on the round that
+    reaches the stars, not one no-change round later.  Returns the same
+    contract as cc_min_labels: (doc_id, cluster_id = component min)
+    for every node with at least one edge."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     cur = (
@@ -640,7 +633,6 @@ def cc_large_star_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    converged = False
     for _ in range(max_iter):
         und = cur.unionByName(
             cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -670,19 +662,22 @@ def cc_large_star_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         )
         superseded = cur
         cur = small.localCheckpoint(eager=True)
-        # Fixpoint check on the materialized sets: equal cardinality
-        # plus empty one-sided difference <=> equal sets (both are
-        # distinct).  Two cheap jobs over checkpointed inputs.
-        if cur.count() == superseded.count() and cur.exceptAll(
-            superseded
-        ).isEmpty():
-            _release_checkpoint(superseded)
-            converged = True
-            break
         _release_checkpoint(superseded)
-    if not converged:
+        # star-forest check (docstring): every source occurs exactly
+        # once among all endpoints — as the source of its one edge.
+        ends = cur.select("src", F.lit(1).alias("o")).unionByName(
+            cur.select(F.col("dst").alias("src"), F.lit(0).alias("o"))
+        )
+        if (
+            ends.groupBy("src")
+            .agg(F.max("o").alias("o"), F.count("o").alias("n"))
+            .filter("o = 1 AND n > 1")
+            .isEmpty()
+        ):
+            break
+    else:
         warnings.warn(
-            f"cc_large_star_small_star: edge set not a fixpoint after "
+            f"cc_large_star_small_star: not a star forest after "
             f"{max_iter} rounds; labels may be partially contracted",
             RuntimeWarning,
             stacklevel=2,

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_example_spark.operators.pinning import _release_checkpoint
 from flink_streaming_example_spark.plans.registry import register
 from flink_streaming_example_spark.sources.tables import load_table
 
@@ -309,27 +310,13 @@ SELECT node, deg, CAST(rn AS INTEGER) AS rn FROM (
 """
 
 
-@register("q_kcore", oracle=_kcore_oracle(), tags=("graph",))
-def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative k-core peeling (block comment above) on the part
-    co-purchase graph: three unrolled peel rounds — degree count (one
-    shuffle keyed by node), then two semi-joins filtering both edge
-    endpoints to survivors — and the top-{_CORE_TOP} surviving nodes
-    by residual degree.  Nothing driver-side; survivor filters are
-    broadcast semi-joins (survivors are node-sized — see the loop
-    comment for the at-scale fallback)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    e = copurchase_half_edges(li).localCheckpoint(eager=True)
-    # each round references e multiple times (degree agg + survivor
-    # probes), so the unrolled lineage re-evaluates the pair build
-    # 3^R times without a cut — measured 9.4 s warm at sf0.1;
-    # localCheckpoint per round makes it linear (same lesson as
-    # PageRank's edge-list checkpoint, graph.py above).
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
+def kcore_peel(e: DataFrame, k: int, rounds: int) -> DataFrame:
+    """The k-core peel kernel behind q_kcore (factored so the volume
+    smoke can drive it on synthetic graphs): given a checkpointed
+    half-edge frame (p1, p2), run ``rounds`` rounds of a degree count
+    (one shuffle keyed by node) plus two semi-joins filtering both
+    endpoints to nodes of degree >= ``k``, and return the surviving
+    (node, deg).  Nothing driver-side; releases the caller's ``e``."""
 
     def degrees(pairs_df):
         return (
@@ -340,8 +327,13 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
 
-    for _ in range(_CORE_ROUNDS):
-        surv = degrees(e).filter(F.col("deg") >= _CORE_K).select("node")
+    # each round references e multiple times (degree agg + survivor
+    # probes), so the unrolled lineage re-evaluates the pair build
+    # 3^R times without a cut — measured 9.4 s warm at sf0.1;
+    # localCheckpoint per round makes it linear (same lesson as
+    # PageRank's edge-list checkpoint, graph.py above).
+    for _ in range(rounds):
+        surv = degrees(e).filter(F.col("deg") >= k).select("node")
         # survivor sets are NODE-sized (PageRank's broadcast
         # justification applies verbatim): broadcast both probes so a
         # round costs one shuffle (the degree agg), not three.  At a
@@ -361,12 +353,24 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        # each round supersedes the previous materialization — free
-        # its blocks deterministically (dedup.py's CC-loop idiom;
-        # clearCache cannot reach localCheckpoint RDDs)
+        # free the superseded round's blocks (see _release_checkpoint)
         _release_checkpoint(superseded)
+    return degrees(e)
+
+
+@register("q_kcore", oracle=_kcore_oracle(), tags=("graph",))
+def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iterative k-core peeling (block comment above) on the part
+    co-purchase graph: three rounds of kcore_peel(), then the
+    top-{_CORE_TOP} surviving nodes by residual degree."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    e = copurchase_half_edges(li).localCheckpoint(eager=True)
     return _top_ranked(
-        degrees(e), [F.col("deg").desc(), F.col("node")], _CORE_TOP
+        kcore_peel(e, _CORE_K, _CORE_ROUNDS),
+        [F.col("deg").desc(), F.col("node")],
+        _CORE_TOP,
     )
 
 
@@ -601,10 +605,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes outgrow broadcast, drop the hints, same shape.  Fixed
     _BFS_MAX_HOPS rounds unroll with localCheckpoint truncation per
     level (the k-core re-evaluation lesson)."""
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )

@@ -66,6 +66,21 @@ _BOUNDED_SLOTS: dict[str, str] = {
 _BOUNDED_RDD_IDS: dict[int, str] = {}
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a superseded localCheckpoint's blocks deterministically.
+
+    localCheckpoint persists an internal RDD OUTSIDE the SQL
+    CacheManager, so spark.catalog.clearCache() cannot touch it and
+    the blocks otherwise linger until both Python and JVM GC plus the
+    ContextCleaner happen to run.  The LogicalRDD accessor is internal
+    API — verified on PySpark 4.1; on any failure we fall back to that
+    lazy GC path (correctness is unaffected either way)."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
 def _logical_rdd_ids(df: DataFrame) -> set[int]:
     """RDD ids of every LogicalRDD node in ``df``'s analyzed plan."""
     ids: set[int] = set()
@@ -102,10 +117,6 @@ def pin(df: DataFrame, slot: str) -> DataFrame:
     per-slot one-live-result contract).  ``df`` must NOT derive from
     the slot's previous checkpoint — the release truncates that
     lineage before the new materialization reads it."""
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
-
     if _AUDIT_PRE_PIN is not None:
         _AUDIT_PRE_PIN.append(df)
     prev = _SLOTS.pop(slot, None)
@@ -128,10 +139,6 @@ def release_all() -> None:
     the single local-mode JVM and shows up as cross-sweep timing
     inflation.  Queries never call this themselves; within a key the
     per-slot superseded-release contract applies."""
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
-
     while _SLOTS:
         _slot, ck = _SLOTS.popitem()
         _release_checkpoint(ck)

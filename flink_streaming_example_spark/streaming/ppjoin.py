@@ -151,6 +151,7 @@ from flink_streaming_example_spark.operators.dedup import (
     ppjoin_probe_k,
     trigram_shingle_frame,
 )
+from flink_streaming_example_spark.operators.pinning import _release_checkpoint
 
 _DOCS = "docs"
 _POSTINGS = "postings"
@@ -362,9 +363,6 @@ def ppjoin_merge_batch(
     Assumes the unique-delivery contract (module docstring): each
     doc_id arrives in exactly one micro-batch outside crash replay."""
     from flink_streaming_example_spark.operators import pinning
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
 
     spark = batch_docs.sparkSession
     meta = _read_meta(state_dir)

@@ -85,3 +85,18 @@ def test_lss_disjoint_cliques_and_self_pairs(spark):
         | {(20, 20), (21, 20)}
     )
     assert got == want
+
+
+def test_lss_stops_on_the_round_that_reaches_stars(spark):
+    """A 3-node path becomes the star {1->0, 2->0} in one round.  The
+    star-forest check must certify that round itself, so a budget of
+    one round suffices — no extra no-change round, no warning."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = _labels_of(
+            cc_large_star_small_star(_path_edges(spark, 3), max_iter=1)
+        )
+    assert got == {(0, 0), (1, 0), (2, 0)}
+    assert not [
+        w for w in caught if issubclass(w.category, RuntimeWarning)
+    ], [str(w.message) for w in caught]

@@ -23,33 +23,31 @@ from flink_streaming_example_spark.operators.dedup import (
 from flink_streaming_example_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE_DIR
 
-# Ground-truth pair queries: the same shingle/threshold math as the
-# registered oracles (_DEDUP_NEAR_ORACLE / _CONTAINMENT_ORACLE), but
-# emitting the PAIRS, which is what the blocker must not lose.
-_TRUE_JACCARD_PAIRS = """
+# Ground-truth pairs of both registered oracles (_DEDUP_NEAR_ORACLE /
+# _CONTAINMENT_ORACLE) in one exact pass: the same shingles and the
+# same threshold expressions, but emitting the PAIRS, which is what the
+# blocker must not lose.  Instead of an all-pairs list_intersect, the
+# shingle self-join counts |A∩B| for every pair sharing a shingle
+# (pairs sharing none clear neither threshold); the lists are
+# distinct, so |A∪B| = |A| + |B| - |A∩B|.
+_TRUE_PAIRS = """
 WITH sh AS (
   SELECT doc_id,
     list_distinct([substring(text, i, 5)
                    FOR i IN range(1, greatest(length(text) - 3, 2))]) AS s
   FROM read_parquet('{sf}/documents.parquet')
+), flat AS (
+  SELECT doc_id, len(s) AS n, unnest(s) AS g FROM sh
+), inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS na, b.n AS nb,
+         count(*) AS i
+  FROM flat a JOIN flat b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY ALL
 )
-SELECT a.doc_id AS id_a, b.doc_id AS id_b
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-      / len(list_distinct(list_concat(a.s, b.s))) >= 0.6
-"""
-
-_TRUE_CONTAINMENT_PAIRS = """
-WITH sh AS (
-  SELECT doc_id,
-    list_distinct([substring(text, i, 5)
-                   FOR i IN range(1, greatest(length(text) - 3, 2))]) AS s
-  FROM read_parquet('{sf}/documents.parquet')
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE 1000 * len(list_intersect(a.s, b.s))
-      // least(len(a.s), len(b.s)) >= 900
+SELECT id_a, id_b,
+  CAST(i AS DOUBLE) / (na + nb - i) >= 0.6 AS jaccard,
+  1000 * i // least(na, nb) >= 900 AS containment
+FROM inter
 """
 
 
@@ -68,15 +66,14 @@ def test_blocker_recall_covers_every_oracle_pair(spark):
     fixture regeneration, the honest fixes are (a) more bands /
     looser prefilter, or (b) swapping the containment blocker to the
     PPJoin prefix-filter documented in q_containment_dedup."""
-    con = duckdb.connect()
-    truth: dict[str, set[tuple[int, int]]] = {}
-    for label, sql in (
-        ("jaccard>=0.6", _TRUE_JACCARD_PAIRS),
-        ("containment>=900pm", _TRUE_CONTAINMENT_PAIRS),
-    ):
-        rows = con.execute(sql.format(sf=SF_SMOKE_DIR)).fetchall()
-        truth[label] = {(a, b) for a, b in rows}
-        assert truth[label], (
+    sql = _TRUE_PAIRS.format(sf=SF_SMOKE_DIR)
+    rows = duckdb.connect().execute(sql).fetchall()
+    truth = {
+        "jaccard>=0.6": {(a, b) for a, b, jac, _ in rows if jac},
+        "containment>=900pm": {(a, b) for a, b, _, cont in rows if cont},
+    }
+    for label, pairs in truth.items():
+        assert pairs, (
             f"fixture has zero {label} pairs — the recall property "
             "would be vacuous; regenerate with duplicate mutations"
         )

@@ -1088,7 +1088,7 @@ def test_forced_broadcast_pinned_frames_use_slot_registry(spark):
         # release the selftest checkpoints too — otherwise they hold
         # storage blocks in the shared session fixture for the rest of
         # the test run (round-13 ADVICE item 3)
-        from flink_streaming_example_spark.operators.dedup import (
+        from flink_streaming_example_spark.operators.pinning import (
             _release_checkpoint,
         )
 

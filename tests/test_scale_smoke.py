@@ -291,11 +291,8 @@ def test_kcore_peel_1m_edges(spark):
     edge each, ~1,000 per ring node).  Peeling with K=15: every leaf
     dies in round 1 (degree 1), ring nodes then hold exactly their 20
     ring edges and all survive round 2 — so the fixed point is the
-    ring, bit-exactly.  Runs the same half-edge degrees/semi-join/
-    checkpoint shape as q_kcore."""
-    from flink_streaming_example_spark.operators.dedup import (
-        _release_checkpoint,
-    )
+    ring, bit-exactly.  Drives q_kcore's own kernel, kcore_peel()."""
+    from flink_streaming_example_spark.operators.graph import kcore_peel
 
     n_ring, n_leaf, K = 1_000, 1_000_000, 15
     ring = spark.range(n_ring).selectExpr(
@@ -309,34 +306,7 @@ def test_kcore_peel_1m_edges(spark):
         (F.col("id") + n_ring).alias("p2"),
     )
     e = ring.unionByName(leaves).localCheckpoint(eager=True)
-
-    def degrees(pairs_df):
-        return (
-            pairs_df.select(
-                F.explode(F.array(F.col("p1"), F.col("p2"))).alias("node")
-            )
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-
-    for _ in range(3):
-        surv = degrees(e).filter(F.col("deg") >= K).select("node")
-        superseded = e
-        e = (
-            e.join(
-                F.broadcast(surv.withColumnRenamed("node", "p1")),
-                "p1",
-                "left_semi",
-            )
-            .join(
-                F.broadcast(surv.withColumnRenamed("node", "p2")),
-                "p2",
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
-        )
-        _release_checkpoint(superseded)
-    final = degrees(e).toPandas()
+    final = kcore_peel(e, K, 3).toPandas()
     assert len(final) == n_ring
     assert set(final["deg"]) == {20}
     assert set(final["node"]) == set(range(n_ring))
@@ -746,40 +716,6 @@ def test_banded_blocker_natural_vocab_candidates_subquadratic(spark):
     assert probe_p99 <= 50, (
         f"per-doc rarest-shingle document frequency p99 {probe_p99}"
     )
-
-
-def test_global_rank_20m_rows_exact(spark):
-    """The q_sort witness kernel at 100x the fixture: 20M rows, 1000
-    distinct sort values (20k-row tie groups spanning every range
-    boundary), tiebreak on id.  Closed form under (v ASC, id ASC):
-    pos = v*(N/1000) + (id - v)/1000 + 1.  Asserts zero mismatches and
-    that pos is a permutation of 1..N — the local-rank + broadcast-
-    offset composition cannot silently skip or duplicate a rank at
-    volume.  (The kernel's one collect is partition-count-sized, and
-    no stage holds more than one range partition; this smoke fails
-    loudly if either property regresses.)"""
-    from flink_streaming_example_spark.operators.setops import global_rank
-
-    n = N  # 20M
-    groups = 1_000
-    df = spark.range(n).select(
-        F.col("id"), (F.col("id") % groups).alias("v")
-    )
-    ranked = global_rank(df, [F.col("v"), F.col("id")])
-    expected = (
-        F.col("v") * (n // groups)
-        + (F.col("id") - F.col("v")) / groups
-        + 1
-    ).cast("int")
-    agg = ranked.agg(
-        F.sum(F.when(F.col("pos") != expected, 1).otherwise(0)).alias("bad"),
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("pos").alias("d"),
-        F.min("pos").alias("lo"),
-        F.max("pos").alias("hi"),
-    ).collect()[0]
-    assert agg["bad"] == 0
-    assert (agg["n"], agg["d"], agg["lo"], agg["hi"]) == (n, n, 1, n)
 
 
 def test_sketch_bounds_hold_at_20m_rows(spark):

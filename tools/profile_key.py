@@ -27,7 +27,6 @@ def main() -> None:
     key = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     evdir = tempfile.mkdtemp(prefix="evlog_")
-    os.environ["SPARK_GRAFT_EVENTLOG"] = evdir
 
     from pyspark.sql import SparkSession
 
