@@ -149,17 +149,10 @@ def _host_noise(before: dict | None, after: dict | None) -> dict | None:
     }
 
 
-def main() -> None:
-    reps = _n_reps()
-    jiffies_start = _cpu_jiffies()
-    # The bench sweep holds 261 keys' worth of broadcast/checkpoint
-    # churn in ONE local-mode JVM — it needs the 16g heap the library
-    # default (8g, host-friendly) deliberately doesn't request
-    # (round-12 ADVICE).  Explicit env wins; this must run before the
-    # session is built.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
-    spark = get_spark("flink-streaming-example-spark-bench")
-    specs = all_specs()
+def warm_session(spark, sf_dir: str) -> None:
+    """One-time session warm-up — JIT, table footers, Python workers,
+    synthesized source corpora, the streaming engine — so first-touch
+    costs land in session setup, not on whichever key runs first."""
     # Warm the JVM: codegen, the parquet datasource init path, and
     # every fixture table's footer/schema read — first-touch costs are
     # one-time session setup, not per-query work, and without this
@@ -169,7 +162,7 @@ def main() -> None:
 
     for t in TABLE_NAMES:
         try:
-            spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(1).collect()
+            spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).collect()
         except Exception:
             pass
     # Warm the Python worker pool + Arrow serde across all cores: the
@@ -222,7 +215,7 @@ def main() -> None:
             documents_as_media_files,
         ):
             try:
-                _synth(spark, SF_DIR)
+                _synth(spark, sf_dir)
             except Exception:
                 pass  # the owning key will surface the real error
     except Exception:
@@ -244,6 +237,20 @@ def main() -> None:
         q.stop()
     except Exception:
         pass
+
+
+def main() -> None:
+    reps = _n_reps()
+    jiffies_start = _cpu_jiffies()
+    # The bench sweep holds 261 keys' worth of broadcast/checkpoint
+    # churn in ONE local-mode JVM — it needs the 16g heap the library
+    # default (8g, host-friendly) deliberately doesn't request
+    # (round-12 ADVICE).  Explicit env wins; this must run before the
+    # session is built.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    spark = get_spark("flink-streaming-example-spark-bench")
+    specs = all_specs()
+    warm_session(spark, SF_DIR)
 
     # Reps are SWEEP-MAJOR (all keys rep-1, then rep-2, ...) so one
     # key's reps are separated by a full ~2-minute sweep and sample
@@ -284,11 +291,13 @@ def main() -> None:
                 # Drop any cached blocks the query left behind so memory
                 # pressure doesn't accumulate across the ~90-key run.
                 spark.catalog.clearCache()
-                # Release pin-slot localCheckpoints too (round 12):
-                # catalog.clearCache() only clears the SQL cache, so
-                # every pinned key's checkpoint blocks would otherwise
-                # stay live for the rest of the sweep — storage that
-                # crowds execution memory in the one local-mode JVM.
+                # Release the key's checkpoints too (round 12):
+                # catalog.clearCache() only clears the SQL cache, and
+                # every eager localCheckpoint a key makes lives in a pin
+                # slot (operators/pinning.py owns them all).  Without
+                # this their blocks stay live for the rest of the sweep
+                # — storage that crowds execution memory in the one
+                # local-mode JVM.
                 pinning.release_all()
 
     import statistics

@@ -15,11 +15,16 @@ Scale notes (100 TB):
   (approxSimilarityJoin joins on shared hash buckets), and the n-gram
   Jaccard path blocks on a 40-char prefix fingerprint before computing
   any pairwise similarity.  The greedy min-id survivor rule is exact
-  for the fixture's small clusters; for transitive clusters,
-  cc_min_labels() provides the iterative connected-components election
-  (min-label propagation, used by q_dedup_clusters and
-  q_clean_corpus); swap in large-star/small-star for O(log n) rounds
-  on mega-components.
+  for the fixture's small clusters; for transitive clusters, two
+  connected-components kernels elect the component minimum:
+  cc_min_labels() (min-label propagation, O(diameter) rounds; used by
+  q_dedup_clusters and q_clean_corpus) and cc_large_star_small_star()
+  (O(log n) rounds; used by q_dedup_clusters_lss and
+  q_connected_components).  Both stay because each wins on one graph
+  shape: on q_dedup_clusters' small-diameter edges (256 at sf0.1)
+  min-labels takes 11 jobs and 0.73-0.95 s warm against LSS's 16 jobs
+  and 1.09-1.50 s, while only LSS finishes the 1M-edge chain smoke
+  (diameter 1,000) in its round budget.
 - SimHash is the constant-cost alternative: one 32/64-bit signature
   per doc (single aggregation), near-dups found by hamming distance on
   rotated-signature sort keys instead of pair joins.
@@ -33,7 +38,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_example_spark.operators.pinning import _release_checkpoint
+from flink_streaming_example_spark.operators.pinning import pin
 from flink_streaming_example_spark.plans.registry import register
 from flink_streaming_example_spark.sources.tables import load_table
 
@@ -487,10 +492,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(label(neighbors))) until fixpoint, with the edge list persisted
     and each round one join + one aggregate.  Convergence needs
     O(component diameter) rounds (fixture clusters are prefix blocks,
-    diameter <= 2; capped at 20).  At 100 TB scale swap in the
-    large-star/small-star variant for O(log n) rounds; the oracle is a
-    recursive-CTE transitive closure, exact because components are
-    small."""
+    diameter <= 2; capped at 20), which is why this key keeps
+    cc_min_labels: on these edges it beats cc_large_star_small_star
+    (q_dedup_clusters_lss, same oracle; module docstring numbers),
+    whose O(log n) rounds pay off only on long-diameter components.
+    The oracle is a recursive-CTE transitive closure, exact because
+    components are small."""
     edges = _ngram_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
     return cc_min_labels(edges)
 
@@ -501,8 +508,8 @@ def cc_min_labels(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     for every node with at least one edge.  Converges in O(diameter)
     rounds; runs at least ``max_iter`` rounds (batched 3 per
     convergence check) and emits a RuntimeWarning if the fixpoint was
-    not reached.  See q_dedup_clusters docstring for the
-    large-star/small-star swap at scale."""
+    not reached.  cc_large_star_small_star is the O(log n)-round
+    kernel for long-diameter components (module docstring)."""
     edges = edges.persist()
     und = edges.selectExpr("doc_id_a AS src", "doc_id_b AS dst").unionByName(
         edges.selectExpr("doc_id_b AS src", "doc_id_a AS dst")
@@ -511,10 +518,11 @@ def cc_min_labels(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # aggregate — same shuffle cost as the plain distinct() init but
     # every label already carries 1-hop reach, saving a propagation
     # round on every component.
-    labels = (
-        und.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.least(F.first("src"), F.min("dst")).alias("cluster_id"))
-        .localCheckpoint(eager=True)
+    labels = pin(
+        und.groupBy(F.col("src").alias("doc_id")).agg(
+            F.least(F.first("src"), F.min("dst")).alias("cluster_id")
+        ),
+        "cc_min_labels:labels",
     )
     def propagate(cur: DataFrame) -> DataFrame:
         nb_min = (
@@ -563,9 +571,7 @@ def cc_min_labels(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         for _ in range(batch):
             cur = propagate(cur)
         rounds_done += batch
-        superseded = labels
-        labels = cur.localCheckpoint(eager=True)
-        _release_checkpoint(superseded)
+        labels = pin(cur, "cc_min_labels:labels")
         changed = labels.filter(F.col("chg")).count()
         if changed == 0:
             break
@@ -624,14 +630,14 @@ def cc_large_star_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     for every node with at least one edge."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    cur = (
+    cur = pin(
         edges.select(
             F.greatest("doc_id_a", "doc_id_b").alias("src"),
             F.least("doc_id_a", "doc_id_b").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc_large_star_small_star:edges",
     )
     for _ in range(max_iter):
         und = cur.unionByName(
@@ -660,9 +666,7 @@ def cc_large_star_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
             .unionByName(sm.select("src", F.col("m").alias("dst")))
             .distinct()
         )
-        superseded = cur
-        cur = small.localCheckpoint(eager=True)
-        _release_checkpoint(superseded)
+        cur = pin(small, "cc_large_star_small_star:edges")
         # star-forest check (docstring): every source occurs exactly
         # once among all endpoints — as the source of its one edge.
         ends = cur.select("src", F.lit(1).alias("o")).unionByName(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_example_spark.operators.pinning import _release_checkpoint
+from flink_streaming_example_spark.operators.pinning import pin
 from flink_streaming_example_spark.plans.registry import register
 from flink_streaming_example_spark.sources.tables import load_table
 
@@ -130,14 +130,14 @@ def pagerank_ranks(
     the hints and pre-partition edges by src so the shuffle joins
     co-locate."""
     base = 15 * scale // 100
-    nodes = (
+    nodes = pin(
         edges_raw.select(F.col("src").alias("node"))
         .union(edges_raw.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "pagerank_ranks:nodes",
     )
     out_deg = edges_raw.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    edges = edges_raw.join(out_deg, "src").localCheckpoint(eager=True)
+    edges = pin(edges_raw.join(out_deg, "src"), "pagerank_ranks:edges")
 
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for _ in range(rounds):
@@ -189,10 +189,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint idiom as the connected-components loop
     # (dedup.py); at cluster scale this is the persisted edge list
     # every PageRank implementation starts from.
-    edges_raw = pairs.select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-    ).localCheckpoint(eager=True)
+    src = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
+    dst = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
+    edges_raw = pin(
+        pairs.select(src.alias("src"), dst.alias("dst")), "q_pagerank:edges"
+    )
     ranks = pagerank_ranks(edges_raw)
     return _top_ranked(
         ranks.select("node", "rank"),
@@ -316,7 +317,8 @@ def kcore_peel(e: DataFrame, k: int, rounds: int) -> DataFrame:
     half-edge frame (p1, p2), run ``rounds`` rounds of a degree count
     (one shuffle keyed by node) plus two semi-joins filtering both
     endpoints to nodes of degree >= ``k``, and return the surviving
-    (node, deg).  Nothing driver-side; releases the caller's ``e``."""
+    (node, deg).  Nothing driver-side; each round's edges are pinned
+    into the one ``kcore_peel:edges`` slot."""
 
     def degrees(pairs_df):
         return (
@@ -339,22 +341,18 @@ def kcore_peel(e: DataFrame, k: int, rounds: int) -> DataFrame:
         # round costs one shuffle (the degree agg), not three.  At a
         # scale where nodes themselves overflow broadcast, drop the
         # hints — the semi-join shape is unchanged.
-        superseded = e
-        e = (
+        e = pin(
             e.join(
                 F.broadcast(surv.withColumnRenamed("node", "p1")),
                 "p1",
                 "left_semi",
-            )
-            .join(
+            ).join(
                 F.broadcast(surv.withColumnRenamed("node", "p2")),
                 "p2",
                 "left_semi",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "kcore_peel:edges",
         )
-        # free the superseded round's blocks (see _release_checkpoint)
-        _release_checkpoint(superseded)
     return degrees(e)
 
 
@@ -366,7 +364,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = copurchase_half_edges(li).localCheckpoint(eager=True)
+    e = pin(copurchase_half_edges(li), "q_kcore:edges")
     return _top_ranked(
         kcore_peel(e, _CORE_K, _CORE_ROUNDS),
         [F.col("deg").desc(), F.col("node")],
@@ -443,7 +441,7 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = copurchase_half_edges(li).localCheckpoint(eager=True)
+    e = pin(copurchase_half_edges(li), "q_triangles:edges")
     deg = (
         e.select(F.explode(F.array("p1", "p2")).alias("node"))
         .groupBy("node")
@@ -451,7 +449,7 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # p1 < p2 always holds for half-edges, so the (deg, id) tiebreak
     # reduces to: p1 leads iff its degree is <= p2's.
-    oriented = (
+    oriented = pin(
         e.join(
             F.broadcast(
                 deg.select(F.col("node").alias("p1"), F.col("deg").alias("d1"))
@@ -471,8 +469,8 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("d1") <= F.col("d2"), F.col("p2"))
             .otherwise(F.col("p1"))
             .alias("dst"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "q_triangles:oriented",
     )
     adj = oriented.groupBy(F.col("src").alias("node")).agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
@@ -597,19 +595,24 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph — the reachability/neighborhood-expansion
     primitive (recall expansion, blast-radius queries).
 
-    Level-synchronous frontier form: per hop, the next frontier is
-    (undirected edges ⋈ frontier) minus already-visited — two
-    node-sized joins; the visited set never exceeds |V| rows, unlike
-    the oracle's closure.  Frontier and visited sides carry broadcast
-    hints (node-sized — PageRank's justification); at a scale where
-    nodes outgrow broadcast, drop the hints, same shape.  Fixed
-    _BFS_MAX_HOPS rounds unroll with localCheckpoint truncation per
-    level (the k-core re-evaluation lesson)."""
+    Level-synchronous, ONE frame per hop: the loop state is the
+    visited set (node, d) — the solution set — and the frontier is
+    its last level, ``visited.where(d == h-1)`` (the workset, Flink's
+    delta-iteration form).  Per hop the next level is (undirected
+    edges ⋈ frontier) minus visited — two node-sized joins — and
+    ``visited ∪ next`` is pinned into the one ``q_bfs_hops:visited``
+    slot, so each of the fixed _BFS_MAX_HOPS hops makes one eager
+    checkpoint and lineage stays one hop deep (the k-core
+    re-evaluation lesson).  The visited set never exceeds |V| rows,
+    unlike the oracle's closure.  Frontier and visited sides carry
+    broadcast hints (node-sized — PageRank's justification); at a
+    scale where nodes outgrow broadcast, drop the hints, same
+    shape."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = copurchase_half_edges(li, min_support=_SUPPORT).localCheckpoint(
-        eager=True
+    e = pin(
+        copurchase_half_edges(li, min_support=_SUPPORT), "q_bfs_hops:edges"
     )
     und = e.selectExpr("p1 AS src", "p2 AS dst").unionByName(
         e.selectExpr("p2 AS src", "p1 AS dst")
@@ -619,10 +622,12 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("node") % 100 == 0)
         .distinct()
     )
-    frontier = seeds.select("node", F.lit(0).cast("long").alias("d"))
-    frontier = frontier.localCheckpoint(eager=True)
-    visited = frontier
+    visited = pin(
+        seeds.select("node", F.lit(0).cast("long").alias("d")),
+        "q_bfs_hops:visited",
+    )
     for h in range(1, _BFS_MAX_HOPS + 1):
+        frontier = visited.where(F.col("d") == h - 1)
         nxt = (
             und.join(
                 F.broadcast(frontier.select(F.col("node").alias("src"))),
@@ -633,12 +638,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .select("node", F.lit(h).cast("long").alias("d"))
         )
-        superseded_f, superseded_v = frontier, visited
-        frontier = nxt.localCheckpoint(eager=True)
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-        _release_checkpoint(superseded_f)
-        if superseded_v is not superseded_f:
-            _release_checkpoint(superseded_v)
+        visited = pin(visited.unionByName(nxt), "q_bfs_hops:visited")
     return visited.groupBy(F.col("d").alias("hop")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
@@ -694,8 +694,9 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = copurchase_half_edges(li, min_support=_SUPPORT).localCheckpoint(
-        eager=True
+    e = pin(
+        copurchase_half_edges(li, min_support=_SUPPORT),
+        "q_jaccard_neighbors:edges",
     )
     sym = e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).unionAll(
         e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
@@ -832,8 +833,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = copurchase_half_edges(li, min_support=_SUPPORT).localCheckpoint(
-        eager=True
+    e = pin(
+        copurchase_half_edges(li, min_support=_SUPPORT),
+        "q_label_propagation:edges",
     )
     und = e.selectExpr("p1 AS src", "p2 AS dst").unionByName(
         e.selectExpr("p2 AS src", "p1 AS dst")

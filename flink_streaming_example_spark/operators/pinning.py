@@ -1,21 +1,28 @@
-"""Shared localCheckpoint pinning: superseded-release + scan audit.
+"""Checkpoint lifetime: the one owner of every eager localCheckpoint.
 
 A DataFrame referenced k times re-executes its whole subtree k times
 at the parquet scan (exchange reuse is an optimization, not a
-guarantee — SURVEY.md §14.1), so keys whose plans fan out over an
-aggregate pin it with an EAGER ``localCheckpoint``.  This module
-centralizes the two contracts every pin site was hand-rolling:
+guarantee — SURVEY.md §14.1), and an iterative loop's plan nests one
+more round per iteration; both cut lineage with an EAGER
+``localCheckpoint``.  Every such checkpoint in the package is made by
+``pin`` here — no other module calls ``localCheckpoint`` or frees a
+checkpoint's blocks — so when blocks are freed is decided in one
+place.  Two contracts:
 
-1. **Superseded release, per slot.**  ``pin(df, slot)`` releases the
-   SAME slot's previous checkpoint before materializing the new one,
-   bounding accumulation across bench reps at one live frame per
-   slot.  The one-live-result contract is therefore PER SLOT (round-11
-   ADVICE: ``global_rank``'s single process-global holder meant two
-   live ranked frames could never coexist): callers that need two
-   results alive at once pass distinct slot names.  Corollary: the
-   frame returned by a previous ``pin`` call on the same slot is DEAD
-   after the next call — materialize (collect/write) before
-   re-invoking.
+1. **Superseded release, per slot.**  ``pin(df, slot)`` materializes
+   the new checkpoint FIRST, then releases the SAME slot's previous
+   one, bounding accumulation at one live frame per slot.  That order
+   lets a loop pin its state into one slot round after round: ``df``
+   may derive from the slot's previous checkpoint, which is read
+   while the new one is built and only then freed.  Slots are named
+   ``<key or kernel>:<role>``.  The one-live-result contract is PER
+   SLOT (round-11 ADVICE: ``global_rank``'s single process-global
+   holder meant two live ranked frames could never coexist): callers
+   that need two results alive at once pass distinct slot names.
+   Corollary: the frame returned by a previous ``pin`` call on the
+   same slot is DEAD after the next call — materialize
+   (collect/write) before re-invoking.  ``release_all`` frees every
+   slot; the bench harnesses call it between keys.
 
 2. **Scan-audit hook** (round-11 ADVICE item 4): a checkpoint
    truncates lineage, so a pinned key's final plan shows only
@@ -112,17 +119,15 @@ def audit_frame(df: DataFrame) -> DataFrame:
 
 
 def pin(df: DataFrame, slot: str) -> DataFrame:
-    """Eagerly localCheckpoint ``df``, releasing ``slot``'s previous
-    checkpoint first (superseded-release; see module docstring for the
-    per-slot one-live-result contract).  ``df`` must NOT derive from
-    the slot's previous checkpoint — the release truncates that
-    lineage before the new materialization reads it."""
+    """Eagerly localCheckpoint ``df``, then release ``slot``'s previous
+    checkpoint (superseded-release; see module docstring for the
+    per-slot one-live-result contract)."""
     if _AUDIT_PRE_PIN is not None:
         _AUDIT_PRE_PIN.append(df)
+    ck = df.localCheckpoint(eager=True)
     prev = _SLOTS.pop(slot, None)
     if prev is not None:
         _release_checkpoint(prev)
-    ck = df.localCheckpoint(eager=True)
     _SLOTS[slot] = ck
     if slot in _BOUNDED_SLOTS:
         for rid in _logical_rdd_ids(ck):

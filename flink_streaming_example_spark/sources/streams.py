@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from flink_streaming_example_spark.operators.pinning import pin
 from flink_streaming_example_spark.plans.registry import register
 from flink_streaming_example_spark.session import ensure_session_confs
 from flink_streaming_example_spark.sources.tables import SCHEMAS, load_table
@@ -432,13 +433,12 @@ def _register_file_sink_key() -> None:
             )
             q.awaitTermination()
             back = spark.read.parquet(out)
-            return (
-                back.groupBy("event_type")
-                .agg(
+            return pin(
+                back.groupBy("event_type").agg(
                     F.count(F.lit(1)).alias("n_events"),
                     F.sum(F.col("event_id").cast("long")).alias("id_sum"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                "q_file_sink_roundtrip:result",
             )
         finally:
             shutil.rmtree(out, ignore_errors=True)

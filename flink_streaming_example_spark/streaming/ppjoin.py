@@ -151,7 +151,6 @@ from flink_streaming_example_spark.operators.dedup import (
     ppjoin_probe_k,
     trigram_shingle_frame,
 )
-from flink_streaming_example_spark.operators.pinning import _release_checkpoint
 
 _DOCS = "docs"
 _POSTINGS = "postings"
@@ -198,6 +197,10 @@ _BUCKET_EXPR = {
 # facts tables share the geometric watermark; dfreq has its own.
 _FACTS = (_POSTINGS, _PREFIXES, _DOCS)
 
+# pin slot for the micro-batch's shingle frame — batch-sized and
+# referenced four times (postings, prefixes, docs, ledger); re-pinned
+# per batch, so one batch's frame is live at a time.
+_BATCH_SLOT = "q_streaming_ppjoin:batch"
 # pin slot for the per-batch folded (sh, df) frame — checkpointed so
 # the dfreq state is scanned once per batch even though the frame
 # feeds both the state write and the prefix ranking (superseded
@@ -367,283 +370,277 @@ def ppjoin_merge_batch(
     spark = batch_docs.sparkSession
     meta = _read_meta(state_dir)
     first = meta["max"] < 0 or batch_id == 0
-    new = trigram_shingle_frame(
-        batch_docs.select("doc_id", "text")
-    ).localCheckpoint(eager=True)  # batch-sized; referenced 4x below
-    try:
-        new_post = new.select(
-            "doc_id", "n_sh", F.explode("sh_arr").alias("sh")
+    new = pinning.pin(
+        trigram_shingle_frame(batch_docs.select("doc_id", "text")),
+        _BATCH_SLOT,
+    )
+    new_post = new.select(
+        "doc_id", "n_sh", F.explode("sh_arr").alias("sh")
+    )
+    # Incremental df fold (docstring step 2): batch counts are an
+    # O(batch) aggregate; the stored df is looked up latest-wins
+    # for the batch's shingle BUCKETS only (join before any
+    # aggregate — the accumulated postings index is never
+    # aggregated).  Equals a full `all_post.groupBy(sh).count()`
+    # exactly, per-shingle counts folding associatively.
+    delta = new_post.groupBy("sh").agg(
+        F.count(F.lit(1)).alias("delta")
+    )
+    compacting_dfreq = False
+    compacting_facts = False
+    if first:
+        # no committed batch precedes this one (first batch of a
+        # fresh index, or its replay): no prior df exists by
+        # definition — the fold IS the batch count.  Pinned like
+        # the non-first path (r15): the frame feeds the ranked
+        # join AND the dfreq state write, and one batch-sized
+        # checkpoint is cheaper than re-running the explode+agg
+        # per consumer (part of the r15 ppjoin work: medians of
+        # record 31.5 s -> 17.0 s, BENCH_MEDIANS.json).
+        cur_df = pinning.pin(
+            delta.select("sh", F.col("delta").cast("long").alias("df")),
+            _DF_SLOT,
         )
-        # Incremental df fold (docstring step 2): batch counts are an
-        # O(batch) aggregate; the stored df is looked up latest-wins
-        # for the batch's shingle BUCKETS only (join before any
-        # aggregate — the accumulated postings index is never
-        # aggregated).  Equals a full `all_post.groupBy(sh).count()`
-        # exactly, per-shingle counts folding associatively.
-        delta = new_post.groupBy("sh").agg(
-            F.count(F.lit(1)).alias("delta")
-        )
-        compacting_dfreq = False
-        compacting_facts = False
-        if first:
-            # no committed batch precedes this one (first batch of a
-            # fresh index, or its replay): no prior df exists by
-            # definition — the fold IS the batch count.  Pinned like
-            # the non-first path (r15): the frame feeds the ranked
-            # join AND the dfreq state write, and one batch-sized
-            # checkpoint is cheaper than re-running the explode+agg
-            # per consumer (part of the r15 ppjoin work: medians of
-            # record 31.5 s -> 17.0 s, BENCH_MEDIANS.json).
-            cur_df = pinning.pin(
-                delta.select("sh", F.col("delta").cast("long").alias("df")),
-                _DF_SLOT,
-            )
-            sh_buckets: list[int] | None = None
+        sh_buckets: list[int] | None = None
+    else:
+        _cleanup_superseded(state_dir, meta, batch_id)
+        # the batch's touched shingle buckets — a bounded IN-list
+        # (<= _N_SH_BUCKETS ints) collected from the batch-sized
+        # delta, driving every sh-keyed state read's pruning.
+        sh_buckets = [
+            r[0]
+            for r in delta.select(
+                F.expr(_SH_BUCKET).alias("b")
+            ).distinct().collect()
+        ]
+        compacting_dfreq = batch_id % _COMPACT_EVERY == 0
+        # The facts trigger must be REPLAY-DETERMINISTIC: a crash
+        # after the manifest replace (but before Spark's own
+        # checkpoint commit) replays this batch with the ledger
+        # already advanced, so re-evaluating the doubling rule
+        # would flip the decision and overwrite the full view with
+        # new-only rows.  When the manifest already records this
+        # batch (max >= batch_id), its own watermark says what the
+        # committed attempt decided; only a pre-commit replay
+        # (max < batch_id) re-evaluates the ledger.
+        if meta["max"] >= batch_id:
+            compacting_facts = meta["facts_latest"] == batch_id
         else:
-            _cleanup_superseded(state_dir, meta, batch_id)
-            # the batch's touched shingle buckets — a bounded IN-list
-            # (<= _N_SH_BUCKETS ints) collected from the batch-sized
-            # delta, driving every sh-keyed state read's pruning.
-            sh_buckets = [
-                r[0]
-                for r in delta.select(
-                    F.expr(_SH_BUCKET).alias("b")
-                ).distinct().collect()
-            ]
-            compacting_dfreq = batch_id % _COMPACT_EVERY == 0
-            # The facts trigger must be REPLAY-DETERMINISTIC: a crash
-            # after the manifest replace (but before Spark's own
-            # checkpoint commit) replays this batch with the ledger
-            # already advanced, so re-evaluating the doubling rule
-            # would flip the decision and overwrite the full view with
-            # new-only rows.  When the manifest already records this
-            # batch (max >= batch_id), its own watermark says what the
-            # committed attempt decided; only a pre-commit replay
-            # (max < batch_id) re-evaluates the ledger.
-            if meta["max"] >= batch_id:
-                compacting_facts = meta["facts_latest"] == batch_id
-            else:
-                compacting_facts = (
-                    compacting_dfreq
-                    and meta["rows"] - meta["rows_at_compact"]
-                    >= meta["rows_at_compact"]
-                )
-            if compacting_dfreq:
-                # full-view fold (every K-th batch): latest-wins over
-                # EVERY stored shingle, outer-merged with the batch's
-                # deltas — O(distinct shingles), amortized O(dist/K)
-                # per tick; still reads ONLY the dfreq state.
-                old_df = _read_state(
-                    spark, state_dir, _DFREQ, batch_id,
-                    keep_batch=True, meta=meta,
-                )
-                full = old_df.groupBy("sh").agg(
-                    F.max_by("df", "batch").alias("df")
-                )
-                folded = full.join(delta, "sh", "full_outer").select(
-                    "sh",
-                    (
-                        F.coalesce(F.col("df"), F.lit(0))
-                        + F.coalesce(F.col("delta"), F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("df"),
-                )
-            else:
-                old_df = _read_state(
-                    spark, state_dir, _DFREQ, batch_id,
-                    keep_batch=True, buckets=sh_buckets, meta=meta,
-                )
-                prior = (
-                    old_df.join(delta.select("sh"), "sh")
-                    .groupBy("sh")
-                    .agg(F.max_by("df", "batch").alias("df"))
-                )
-                folded = delta.join(prior, "sh", "left").select(
-                    "sh",
-                    (F.coalesce(F.col("df"), F.lit(0)) + F.col("delta"))
-                    .cast("long")
-                    .alias("df"),
-                )
-            # pinned so the dfreq state is scanned once even though
-            # the folded frame feeds both the state write and the
-            # prefix ranking (superseded release bounds it at one
-            # live batch-sized — or, when compacting, shingle-
-            # universe-sized — frame)
-            cur_df = pinning.pin(folded, _DF_SLOT)
-        wp = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh"))
-        # ONE pinned df-ranked postings frame (r15, _RANKED_SLOT note):
-        # postings/prefixes state writes, both candidate legs, and the
-        # facts full view all read this checkpoint instead of each
-        # re-running the explode -> df-join -> window subtree.  The
-        # inner join on sh loses no rows (every batch shingle is in
-        # cur_df by construction), so ranked.select(doc_id, n_sh, sh)
-        # IS new_post, row for row.
-        ranked = pinning.pin(
-            new_post.join(cur_df, "sh").select(
-                "doc_id", "n_sh", "sh", F.row_number().over(wp).alias("_rn")
-            ),
-            _RANKED_SLOT,
-        )
-        new_post = ranked.select("doc_id", "n_sh", "sh")
-        new_prefix = ranked.filter(
-            F.col("_rn") <= ppjoin_probe_k()
-        ).select("doc_id", "sh")
-        old_post = _read_state(
-            spark, state_dir, _POSTINGS, batch_id,
-            buckets=sh_buckets, meta=meta,
-        )
-        old_prefix = _read_state(
-            spark, state_dir, _PREFIXES, batch_id,
-            buckets=sh_buckets, meta=meta,
-        )
-        all_post = old_post.unionByName(new_post)
-        # candidates sharing a probe shingle, with >= 1 member in this
-        # batch: new prefixes hit the bucket-pruned index; stored
-        # prefixes (bucket-pruned to the batch's shingles) hit only
-        # the batch's postings (old-old pairs were probed when their
-        # own later member arrived).
-        cand = (
-            new_prefix.join(
-                all_post.select(F.col("doc_id").alias("id_y"), "sh"), "sh"
+            compacting_facts = (
+                compacting_dfreq
+                and meta["rows"] - meta["rows_at_compact"]
+                >= meta["rows_at_compact"]
             )
-            .select(F.col("doc_id").alias("id_x"), "id_y")
+        if compacting_dfreq:
+            # full-view fold (every K-th batch): latest-wins over
+            # EVERY stored shingle, outer-merged with the batch's
+            # deltas — O(distinct shingles), amortized O(dist/K)
+            # per tick; still reads ONLY the dfreq state.
+            old_df = _read_state(
+                spark, state_dir, _DFREQ, batch_id,
+                keep_batch=True, meta=meta,
+            )
+            full = old_df.groupBy("sh").agg(
+                F.max_by("df", "batch").alias("df")
+            )
+            folded = full.join(delta, "sh", "full_outer").select(
+                "sh",
+                (
+                    F.coalesce(F.col("df"), F.lit(0))
+                    + F.coalesce(F.col("delta"), F.lit(0))
+                )
+                .cast("long")
+                .alias("df"),
+            )
+        else:
+            old_df = _read_state(
+                spark, state_dir, _DFREQ, batch_id,
+                keep_batch=True, buckets=sh_buckets, meta=meta,
+            )
+            prior = (
+                old_df.join(delta.select("sh"), "sh")
+                .groupBy("sh")
+                .agg(F.max_by("df", "batch").alias("df"))
+            )
+            folded = delta.join(prior, "sh", "left").select(
+                "sh",
+                (F.coalesce(F.col("df"), F.lit(0)) + F.col("delta"))
+                .cast("long")
+                .alias("df"),
+            )
+        # pinned so the dfreq state is scanned once even though
+        # the folded frame feeds both the state write and the
+        # prefix ranking (superseded release bounds it at one
+        # live batch-sized — or, when compacting, shingle-
+        # universe-sized — frame)
+        cur_df = pinning.pin(folded, _DF_SLOT)
+    wp = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh"))
+    # ONE pinned df-ranked postings frame (r15, _RANKED_SLOT note):
+    # postings/prefixes state writes, both candidate legs, and the
+    # facts full view all read this checkpoint instead of each
+    # re-running the explode -> df-join -> window subtree.  The
+    # inner join on sh loses no rows (every batch shingle is in
+    # cur_df by construction), so ranked.select(doc_id, n_sh, sh)
+    # IS new_post, row for row.
+    ranked = pinning.pin(
+        new_post.join(cur_df, "sh").select(
+            "doc_id", "n_sh", "sh", F.row_number().over(wp).alias("_rn")
+        ),
+        _RANKED_SLOT,
+    )
+    new_post = ranked.select("doc_id", "n_sh", "sh")
+    new_prefix = ranked.filter(
+        F.col("_rn") <= ppjoin_probe_k()
+    ).select("doc_id", "sh")
+    old_post = _read_state(
+        spark, state_dir, _POSTINGS, batch_id,
+        buckets=sh_buckets, meta=meta,
+    )
+    old_prefix = _read_state(
+        spark, state_dir, _PREFIXES, batch_id,
+        buckets=sh_buckets, meta=meta,
+    )
+    all_post = old_post.unionByName(new_post)
+    # candidates sharing a probe shingle, with >= 1 member in this
+    # batch: new prefixes hit the bucket-pruned index; stored
+    # prefixes (bucket-pruned to the batch's shingles) hit only
+    # the batch's postings (old-old pairs were probed when their
+    # own later member arrived).
+    cand = (
+        new_prefix.join(
+            all_post.select(F.col("doc_id").alias("id_y"), "sh"), "sh"
+        )
+        .select(F.col("doc_id").alias("id_x"), "id_y")
+        .unionByName(
+            old_prefix.join(
+                new_post.select(F.col("doc_id").alias("id_y"), "sh"),
+                "sh",
+            ).select(F.col("doc_id").alias("id_x"), "id_y")
+        )
+        .filter(F.col("id_x") != F.col("id_y"))
+        .select(
+            F.least("id_x", "id_y").alias("id_a"),
+            F.greatest("id_x", "id_y").alias("id_b"),
+        )
+        .distinct()
+    )
+    if first:
+        # fresh index: no stored docs to prune and no candidate
+        # IN-list worth collecting — skip the candidate-set pin
+        # and doc-bucket pruning (the cur_df/ranked pins above
+        # still run; they feed the first batch's state writes too).
+        doc_buckets: list[int] | None = None
+    else:
+        # materialize the candidate set once, collect its doc-id
+        # buckets (a bounded IN-list), and read ONLY those doc
+        # buckets for verification (docstring step 4).
+        cand = pinning.pin(cand, _CAND_SLOT)
+        doc_buckets = [
+            r[0]
+            for r in cand.select(
+                F.expr(_doc_bucket("id_a")).alias("b")
+            )
             .unionByName(
-                old_prefix.join(
-                    new_post.select(F.col("doc_id").alias("id_y"), "sh"),
-                    "sh",
-                ).select(F.col("doc_id").alias("id_x"), "id_y")
-            )
-            .filter(F.col("id_x") != F.col("id_y"))
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
+                cand.select(F.expr(_doc_bucket("id_b")).alias("b"))
             )
             .distinct()
+            .collect()
+        ]
+    old_docs = _read_state(
+        spark, state_dir, _DOCS, batch_id,
+        buckets=doc_buckets, meta=meta,
+    )
+    all_docs = old_docs.unionByName(
+        new.select("doc_id", "sh_arr", "n_sh")
+    )
+    j = (
+        all_docs.select(
+            F.col("doc_id").alias("id_a"),
+            F.col("sh_arr").alias("sa"),
+            F.col("n_sh").alias("na"),
         )
-        if first:
-            # fresh index: no stored docs to prune and no candidate
-            # IN-list worth collecting — skip the candidate-set pin
-            # and doc-bucket pruning (the cur_df/ranked pins above
-            # still run; they feed the first batch's state writes too).
-            doc_buckets: list[int] | None = None
-        else:
-            # materialize the candidate set once, collect its doc-id
-            # buckets (a bounded IN-list), and read ONLY those doc
-            # buckets for verification (docstring step 4).
-            cand = pinning.pin(cand, _CAND_SLOT)
-            doc_buckets = [
-                r[0]
-                for r in cand.select(
-                    F.expr(_doc_bucket("id_a")).alias("b")
-                )
-                .unionByName(
-                    cand.select(F.expr(_doc_bucket("id_b")).alias("b"))
-                )
-                .distinct()
-                .collect()
-            ]
-        old_docs = _read_state(
-            spark, state_dir, _DOCS, batch_id,
-            buckets=doc_buckets, meta=meta,
-        )
-        all_docs = old_docs.unionByName(
-            new.select("doc_id", "sh_arr", "n_sh")
-        )
-        j = (
+        .join(cand, "id_a")
+        .join(
             all_docs.select(
-                F.col("doc_id").alias("id_a"),
-                F.col("sh_arr").alias("sa"),
-                F.col("n_sh").alias("na"),
-            )
-            .join(cand, "id_a")
-            .join(
-                all_docs.select(
-                    F.col("doc_id").alias("id_b"),
-                    F.col("sh_arr").alias("sb"),
-                    F.col("n_sh").alias("nb"),
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("sa", "sb"))
-                .cast("long")
-                .alias("inter"),
-                F.col("na").cast("long").alias("na"),
-                F.col("nb").cast("long").alias("nb"),
-            )
+                F.col("doc_id").alias("id_b"),
+                F.col("sh_arr").alias("sb"),
+                F.col("n_sh").alias("nb"),
+            ),
+            "id_b",
         )
-        small_is_a = F.col("na") <= F.col("nb")
-        pairs = (
-            j.select(
-                F.when(small_is_a, F.col("id_a"))
-                .otherwise(F.col("id_b"))
-                .alias("id_small"),
-                F.when(small_is_a, F.col("id_b"))
-                .otherwise(F.col("id_a"))
-                .alias("id_big"),
-                F.expr("1000 * inter div least(na, nb)").alias("cont_pm"),
-            )
-            .filter(F.col("cont_pm") >= PPJOIN_CONT_PM_MIN)
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sa", "sb"))
+            .cast("long")
+            .alias("inter"),
+            F.col("na").cast("long").alias("na"),
+            F.col("nb").cast("long").alias("nb"),
         )
-        # Exactly-once: every write overwrites THIS batch's partition
-        # only; the manifest replace lands after all five, so a crash
-        # anywhere in between leaves the batch invisible to readers
-        # and the replay overwrites the partial partitions.  A facts
-        # compaction batch writes the UNION of all live fact rows into
-        # its own partition (geometric full view) — these full reads
-        # are unpruned by design and amortized by the doubling rule.
-        _write_state(pairs, state_dir, _PAIRS, batch_id)
+    )
+    small_is_a = F.col("na") <= F.col("nb")
+    pairs = (
+        j.select(
+            F.when(small_is_a, F.col("id_a"))
+            .otherwise(F.col("id_b"))
+            .alias("id_small"),
+            F.when(small_is_a, F.col("id_b"))
+            .otherwise(F.col("id_a"))
+            .alias("id_big"),
+            F.expr("1000 * inter div least(na, nb)").alias("cont_pm"),
+        )
+        .filter(F.col("cont_pm") >= PPJOIN_CONT_PM_MIN)
+    )
+    # Exactly-once: every write overwrites THIS batch's partition
+    # only; the manifest replace lands after all five, so a crash
+    # anywhere in between leaves the batch invisible to readers
+    # and the replay overwrites the partial partitions.  A facts
+    # compaction batch writes the UNION of all live fact rows into
+    # its own partition (geometric full view) — these full reads
+    # are unpruned by design and amortized by the doubling rule.
+    _write_state(pairs, state_dir, _PAIRS, batch_id)
+    if compacting_facts:
+        full_post = _read_state(
+            spark, state_dir, _POSTINGS, batch_id, meta=meta
+        ).unionByName(new_post)
+        full_prefix = _read_state(
+            spark, state_dir, _PREFIXES, batch_id, meta=meta
+        ).unionByName(new_prefix)
+        full_docs = _read_state(
+            spark, state_dir, _DOCS, batch_id, meta=meta
+        ).unionByName(new.select("doc_id", "sh_arr", "n_sh"))
+        _write_state(full_post, state_dir, _POSTINGS, batch_id)
+        _write_state(full_prefix, state_dir, _PREFIXES, batch_id)
+        _write_state(full_docs, state_dir, _DOCS, batch_id)
+    else:
+        _write_state(new_post, state_dir, _POSTINGS, batch_id)
+        _write_state(new_prefix, state_dir, _PREFIXES, batch_id)
+        _write_state(
+            new.select("doc_id", "sh_arr", "n_sh"),
+            state_dir,
+            _DOCS,
+            batch_id,
+        )
+    _write_state(cur_df, state_dir, _DFREQ, batch_id)
+    # postings-row ledger for the geometric trigger — one tiny job
+    # off the batch checkpoint.
+    batch_rows = new.agg(
+        F.coalesce(F.sum("n_sh"), F.lit(0)).alias("r")
+    ).collect()[0]["r"]
+    if meta["max"] < batch_id:
+        # the replay-after-commit guard (a crash between manifest
+        # replace and Spark's own checkpoint commit replays this
+        # batch with the ledger already advanced — don't re-add).
+        meta["rows"] += int(batch_rows)
+        meta["max"] = batch_id
+        if compacting_dfreq:
+            meta["dfreq_prev"] = meta["dfreq_latest"]
+            meta["dfreq_latest"] = batch_id
         if compacting_facts:
-            full_post = _read_state(
-                spark, state_dir, _POSTINGS, batch_id, meta=meta
-            ).unionByName(new_post)
-            full_prefix = _read_state(
-                spark, state_dir, _PREFIXES, batch_id, meta=meta
-            ).unionByName(new_prefix)
-            full_docs = _read_state(
-                spark, state_dir, _DOCS, batch_id, meta=meta
-            ).unionByName(new.select("doc_id", "sh_arr", "n_sh"))
-            _write_state(full_post, state_dir, _POSTINGS, batch_id)
-            _write_state(full_prefix, state_dir, _PREFIXES, batch_id)
-            _write_state(full_docs, state_dir, _DOCS, batch_id)
-        else:
-            _write_state(new_post, state_dir, _POSTINGS, batch_id)
-            _write_state(new_prefix, state_dir, _PREFIXES, batch_id)
-            _write_state(
-                new.select("doc_id", "sh_arr", "n_sh"),
-                state_dir,
-                _DOCS,
-                batch_id,
-            )
-        _write_state(cur_df, state_dir, _DFREQ, batch_id)
-        # postings-row ledger for the geometric trigger — one tiny job
-        # off the batch checkpoint.
-        batch_rows = new.agg(
-            F.coalesce(F.sum("n_sh"), F.lit(0)).alias("r")
-        ).collect()[0]["r"]
-        if meta["max"] < batch_id:
-            # the replay-after-commit guard (a crash between manifest
-            # replace and Spark's own checkpoint commit replays this
-            # batch with the ledger already advanced — don't re-add).
-            meta["rows"] += int(batch_rows)
-            meta["max"] = batch_id
-            if compacting_dfreq:
-                meta["dfreq_prev"] = meta["dfreq_latest"]
-                meta["dfreq_latest"] = batch_id
-            if compacting_facts:
-                meta["facts_prev"] = meta["facts_latest"]
-                meta["facts_latest"] = batch_id
-                meta["rows_at_compact"] = meta["rows"]
-        _write_meta(state_dir, meta)
-    finally:
-        # release the batch checkpoint's blocks (bench sweeps run 262
-        # keys in one JVM; a leaked batch checkpoint per rep is the
-        # round-12 pin-slot bug all over again).  cur_df / cand are
-        # pin slots: superseded release / release_all covers them.
-        _release_checkpoint(new)
+            meta["facts_prev"] = meta["facts_latest"]
+            meta["facts_latest"] = batch_id
+            meta["rows_at_compact"] = meta["rows"]
+    _write_meta(state_dir, meta)
 
 
 def read_ppjoin_pairs(spark: SparkSession, state_dir: str) -> DataFrame:

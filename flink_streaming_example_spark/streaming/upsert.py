@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from flink_streaming_example_spark.operators.pinning import pin
+
 _N_BUCKETS = 16
 
 # Debug hook (tests/test_upsert.py): when True, upsert_batch records the
@@ -312,7 +314,7 @@ def _register_streaming_upsert() -> None:
             # so both dirs can be removed before returning; without this
             # every driver correctness/bench run leaks a merged copy of
             # events to /tmp.
-            return result.localCheckpoint(eager=True)
+            return pin(result, "q_streaming_upsert:result")
         finally:
             shutil.rmtree(table, ignore_errors=True)
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -403,8 +405,9 @@ def _register_streaming_training_mix() -> None:
             )
             # materialize off the temp state before removing it (the
             # report is a few (lang, pack) rows — small)
-            return split_cap_pack_report(survivors).localCheckpoint(
-                eager=True
+            return pin(
+                split_cap_pack_report(survivors),
+                "q_streaming_training_mix:result",
             )
         finally:
             shutil.rmtree(table, ignore_errors=True)
@@ -479,7 +482,7 @@ def _register_streaming_cdc() -> None:
                 "user_id", "event_id", "event_type"
             )
             # materialize off the temp table before removing it
-            return got.localCheckpoint(eager=True)
+            return pin(got, "q_streaming_cdc:result")
         finally:
             shutil.rmtree(table, ignore_errors=True)
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -551,13 +554,15 @@ def retract_agg_sink(
         if os.path.isdir(key_table) and any(
             e.startswith("_bucket=") for e in os.listdir(key_table)
         ):
-            old = (
-                _read_live_buckets(spark, key_table, affected)
-                .join(users, "user_id", "left_semi")
-                # materialize BEFORE the merge rewrites these buckets:
-                # the scan is lazy and would otherwise read post-merge
-                # files (or die on the replaced ones)
-                .localCheckpoint(eager=True)
+            # materialize BEFORE the merge rewrites these buckets:
+            # the scan is lazy and would otherwise read post-merge
+            # files (or die on the replaced ones).  One slot, so only
+            # the latest batch's retractions stay live.
+            old = pin(
+                _read_live_buckets(spark, key_table, affected).join(
+                    users, "user_id", "left_semi"
+                ),
+                "retract_agg_sink:old",
             )
             parts.append(
                 old.select(

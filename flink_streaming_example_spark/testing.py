@@ -108,8 +108,10 @@ def run_oracle_check(spark, con, spec: QuerySpec, sf_dir: str) -> CompareResult:
         # Queries that persist() intermediates (the dedup family) leave
         # cached blocks behind; across an 80+-key parametrized session
         # those accumulate — clear between keys, as bench.py does.
-        # (cc_min_labels' localCheckpoint blocks live OUTSIDE the SQL
-        # cache and are released inside cc_min_labels itself.)
+        # (The checkpoints of cc_min_labels, cc_large_star_small_star
+        # and every other pin slot live OUTSIDE the SQL cache:
+        # operators/pinning.py keeps one per slot and frees it when the
+        # slot is re-pinned or on pinning.release_all().)
         spark.catalog.clearCache()
     if spec.oracle is None:
         # Rows-only keys must still produce something: >0 rows and a

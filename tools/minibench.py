@@ -31,45 +31,7 @@ def main() -> None:
     from flink_streaming_example_spark.session import get_spark
 
     spark = get_spark("minibench")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from flink_streaming_example_spark.sources.tables import TABLE_NAMES
-
-    for t in TABLE_NAMES:
-        try:
-            spark.read.parquet(f"{sf}/{t}.parquet").limit(1).collect()
-        except Exception:
-            pass
-    try:
-        import pandas as _pd
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("double")
-        def _warm(v: _pd.Series) -> _pd.Series:
-            import numpy as _np
-
-            return v * _np.float64(1.0)
-
-        spark.range(1_000_000, numPartitions=64).select(
-            _warm(F.col("id").cast("double")).alias("x")
-        ).agg(F.sum("x")).collect()
-    except Exception:
-        pass
-    try:
-        import tempfile
-
-        sdf = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("minibench_warm")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="mb_warm_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(30)
-        q.stop()
-    except Exception:
-        pass
+    bench.warm_session(spark, sf)
 
     specs = all_specs()
     samples: dict[str, list[tuple[float, float | None]]] = {
