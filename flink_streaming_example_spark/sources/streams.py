@@ -16,6 +16,10 @@ Flink-surface mapping, one constructor per reference pattern:
      escape hatch: arbitrary per-micro-batch logic, also how side
      outputs/multi-sink fan-out is done in Structured Streaming)
 
+Every streaming key runs its writer through ``drain``: one temp work
+dir holding the checkpoint and any sink output, a trigger(availableNow)
+run to termination, and removal of the dir on exit.
+
 Scale notes (100 TB): the file-replay source is partition-parallel
 (one task per file split); Kafka parallelism = topic partitions.  Every
 sink goes through the checkpoint WAL for exactly-once (file/Kafka) or
@@ -24,11 +28,14 @@ at-least-once (foreachBatch with idempotent writes) semantics.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from flink_streaming_example_spark.operators.pinning import pin
 from flink_streaming_example_spark.plans.registry import register
@@ -389,6 +396,36 @@ def foreach_batch_sink(
     return df.writeStream.foreachBatch(fn)
 
 
+@contextmanager
+def drain(
+    make_writer: Callable[[str], DataStreamWriter],
+) -> Iterator[tuple[str, StreamingQuery]]:
+    """Run a bounded stream to termination and yield ``(work_dir,
+    query)``.
+
+    ``make_writer(work_dir)`` builds the writer; whatever its sink
+    writes (a table, a file-sink directory) goes under ``work_dir``.
+    The checkpoint is ``<work_dir>/checkpoint`` (a sink that takes a
+    checkpoint argument is given that same path).  trigger(availableNow)
+    processes everything present at start, then stops — on a bounded
+    replay that is the whole input, which is what makes a streaming
+    result comparable with its batch oracle.  Read the result back
+    inside the block and materialize it (pin): ``work_dir`` is removed
+    on exit, whether the stream succeeded or raised."""
+    work_dir = tempfile.mkdtemp(prefix="drain_")
+    try:
+        query = (
+            make_writer(work_dir)
+            .option("checkpointLocation", f"{work_dir}/checkpoint")
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        yield work_dir, query
+    finally:
+        shutil.rmtree(work_dir, ignore_errors=True)
+
+
 _FILE_SINK_ORACLE = """
 SELECT event_type,
   COUNT(*) AS n_events,
@@ -417,22 +454,13 @@ def _register_file_sink_key() -> None:
         id SUM pins both row preservation and non-duplication (a
         replayed batch would double the sum before it doubled the
         distinct types)."""
-        import shutil
-        import tempfile
-
         ev = events_file_replay(spark, sf_dir).select(
             "event_id", "event_type"
         )
-        out = tempfile.mkdtemp(prefix="file_sink_q_")
-        ckpt = tempfile.mkdtemp(prefix="file_sink_q_ckpt_")
-        try:
-            q = (
-                file_sink(ev, out, ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            back = spark.read.parquet(out)
+        with drain(
+            lambda d: file_sink(ev, f"{d}/out", f"{d}/checkpoint")
+        ) as (d, _q):
+            back = spark.read.parquet(f"{d}/out")
             return pin(
                 back.groupBy("event_type").agg(
                     F.count(F.lit(1)).alias("n_events"),
@@ -440,9 +468,6 @@ def _register_file_sink_key() -> None:
                 ),
                 "q_file_sink_roundtrip:result",
             )
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _register_file_sink_key()
@@ -515,22 +540,9 @@ def _register_console_sink_key() -> None:
         emits every batch header.  Excluded from the run_to_memory
         plan gate like the other self-draining sinks (the sink IS the
         thing under test)."""
-        import shutil
-        import tempfile
-
         ev = events_file_replay(spark, sf_dir)
-        ckpt = tempfile.mkdtemp(prefix="console_q_ckpt_")
-        try:
-            q = (
-                print_sink(ev, num_rows=1)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with drain(lambda _d: print_sink(ev, num_rows=1)) as (_d, q):
             progress = list(q.recentProgress or [])
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
         # recentProgress is a RING BUFFER capped at
         # spark.sql.streaming.numRecentProgressUpdates (default 100);
         # summing a saturated buffer silently undercounts.  Fail loud

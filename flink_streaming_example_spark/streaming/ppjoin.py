@@ -676,39 +676,25 @@ def _register() -> None:
         slicings (pair members arriving in different batches) are
         pinned in tests/test_ppjoin.py; the bounded replay here
         delivers the corpus through the real streaming machinery."""
-        import shutil
-        import tempfile
-
         from flink_streaming_example_spark.operators import pinning
         from flink_streaming_example_spark.sources.streams import (
             documents_file_replay,
+            drain,
         )
 
-        state = tempfile.mkdtemp(prefix="ppjoin_state_")
-        ckpt = tempfile.mkdtemp(prefix="ppjoin_ckpt_")
-        try:
-            docs = documents_file_replay(spark, sf_dir).select(
-                "doc_id", "text"
+        docs = documents_file_replay(spark, sf_dir).select("doc_id", "text")
+        with drain(
+            lambda d: docs.writeStream.foreachBatch(
+                lambda b, bid: ppjoin_merge_batch(b, f"{d}/state", bid)
             )
-            q = (
-                docs.writeStream.foreachBatch(
-                    lambda b, bid: ppjoin_merge_batch(b, state, bid)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # materialize off the temp state so the dirs can be
-            # removed; a PIN slot (not a bare localCheckpoint) so
-            # bench's release_all() frees it between reps (round-13
-            # ADVICE item 2).
+        ) as (d, _q):
+            # materialize off the temp state before the drain removes
+            # it; a PIN slot (not a bare localCheckpoint) so bench's
+            # release_all() frees it between reps (round-13 ADVICE
+            # item 2).
             return pinning.pin(
-                read_ppjoin_pairs(spark, state), "q_streaming_ppjoin"
+                read_ppjoin_pairs(spark, f"{d}/state"), "q_streaming_ppjoin"
             )
-        finally:
-            shutil.rmtree(state, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _register()

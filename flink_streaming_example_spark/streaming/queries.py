@@ -1,7 +1,10 @@
 """Streaming query variants (SURVEY.md §7 M4): the same expression
 trees as the batch operators, executed as Structured Streaming jobs
-over a bounded file replay of events.parquet, drained with
-trigger(availableNow) into a memory sink, and returned as a DataFrame.
+over a bounded file replay of events.parquet, drained into a memory
+sink by run_to_memory (sources/streams.py::drain — one temp checkpoint
+dir, trigger(availableNow), the dir removed on exit), and returned as a
+DataFrame whose plan holds the sink: the result lives exactly as long
+as that frame, with no session-wide view keeping it on the driver.
 
 Because the replay is bounded and deterministic, the streaming results
 equal the batch results (Structured Streaming's prefix-consistency),
@@ -25,7 +28,6 @@ for dedup/joins/windows exactly as configured here.
 from __future__ import annotations
 
 import itertools
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +54,7 @@ from flink_streaming_example_spark.operators.windows import (
 )
 from flink_streaming_example_spark.sources.streams import (
     documents_file_replay,
+    drain,
     events_file_replay,
 )
 
@@ -74,7 +77,16 @@ def run_to_memory(
     shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain a bounded streaming DataFrame into a memory sink
-    (availableNow) and return the materialized result table.
+    (sources/streams.py::drain) and return the materialized result.
+
+    The memory sink registers a temp view under the query name; it is
+    dropped before returning.  The returned frame's plan references
+    the sink directly, so the rows stay readable (collect, count,
+    joins) for as long as the caller holds the frame and become
+    garbage with it — no view keeps every key's result on the driver
+    heap for the rest of the session.  A self-join must rename one
+    side's join key, as q_streaming_topn does: the sink's plan node
+    cannot be re-instanced, with or without the view.
 
     Stateful operator parallelism (= state-store instance count) is
     pinned to the shuffle-partition conf at first checkpoint; the
@@ -98,33 +110,26 @@ def run_to_memory(
     name = f"stream_result_{next(_run_ids)}"
     conf_key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(conf_key)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
     try:
         if shuffle_partitions is not None and int(prev) > shuffle_partitions:
             spark.conf.set(conf_key, str(shuffle_partitions))
-        query = (
-            df.writeStream.format("memory")
+        with drain(
+            lambda _d: df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        if _CAPTURE_STREAMING_PLANS:
-            # the terminated query's lastExecution is the incremental
-            # physical plan that actually ran the final micro-batch
-            _captured_streaming.append(
-                (query._jsq.explainInternal(True), query.lastProgress)
-            )
+        ) as (_d, query):
+            if _CAPTURE_STREAMING_PLANS:
+                # the terminated query's lastExecution is the incremental
+                # physical plan that actually ran the final micro-batch
+                _captured_streaming.append(
+                    (query._jsq.explainInternal(True), query.lastProgress)
+                )
+        return spark.table(name)
     finally:
         spark.conf.set(conf_key, prev)
-        import shutil
-
-        # the drained checkpoint is dead weight (the memory sink holds
-        # the result); leaving it leaks a WAL per key per bench run
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        # the returned frame's plan holds the memory sink itself, so
+        # the view is only a session-long second reference to it
+        spark.catalog.dropTempView(name)
 
 
 _STREAM_TUMBLING_ORACLE = f"""

@@ -31,11 +31,12 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from flink_streaming_example_spark.operators.pinning import pin
+from flink_streaming_example_spark.sources.streams import drain
 
 _N_BUCKETS = 16
 
@@ -48,6 +49,20 @@ _CAPTURE_SCAN_PLANS = False
 _captured_scan_plans: list[str] = []
 
 _META_NAME = "_upsert_meta.json"
+
+
+def _bucket_of(key_cols: list[str], n_buckets: int) -> Column:
+    """A key's bucket.  The merge writes rows by it and the retract
+    sink prunes its reads by it, so both must use this one rule: a
+    drift would read the wrong buckets without any error."""
+    return F.pmod(F.hash(*key_cols), F.lit(n_buckets)).cast("int")
+
+
+def _has_buckets(path: str) -> bool:
+    """True once a merge has written bucket directories at ``path``."""
+    return os.path.isdir(path) and any(
+        e.startswith("_bucket=") for e in os.listdir(path)
+    )
 
 
 def write_upsert_meta(path: str, n_buckets: int) -> None:
@@ -94,9 +109,7 @@ def _check_bucketing(path: str, n_buckets: int) -> None:
                 f"rebucketing requires a full table rewrite"
             )
         return
-    if os.path.isdir(path) and any(
-        e.startswith("_bucket=") for e in os.listdir(path)
-    ):
+    if _has_buckets(path):
         raise ValueError(
             f"upsert table at {path!r} predates bucket metadata; "
             f"confirm its original bucket count and stamp it with "
@@ -164,10 +177,9 @@ def upsert_batch(
     if not batch_df.take(1):
         return
     _check_bucketing(path, n_buckets)
-    bucket = F.pmod(F.hash(*key_cols), F.lit(n_buckets)).cast("int")
-    new = batch_df.withColumn("_bucket", bucket).withColumn(
-        "_is_new", F.lit(1)
-    )
+    new = batch_df.withColumn(
+        "_bucket", _bucket_of(key_cols, n_buckets)
+    ).withColumn("_is_new", F.lit(1))
     if tombstone_col is None:
         new = new.withColumn("_dead", F.lit(False))
     else:
@@ -176,9 +188,7 @@ def upsert_batch(
         ).drop(tombstone_col)
     affected = [r._bucket for r in new.select("_bucket").distinct().collect()]
     merged = new
-    if os.path.isdir(path) and any(
-        e.startswith("_bucket=") for e in os.listdir(path)
-    ):
+    if _has_buckets(path):
         existing = (
             spark.read.parquet(path)
             # partition pruning: only affected bucket dirs are scanned
@@ -275,29 +285,20 @@ def _register_streaming_upsert() -> None:
         rewrites are pinned in tests/test_upsert.py; here the driver
         checks the end-state table against the batch latest-per-key
         window."""
-        import shutil
-        import tempfile
-
         ev = events_file_replay(spark, sf_dir).select(
             "user_id", "event_id", "ts", "event_type", "value"
         )
-        table = tempfile.mkdtemp(prefix="upsert_q_")
-        ckpt = tempfile.mkdtemp(prefix="upsert_q_ckpt_")
-        try:
-            q = (
-                upsert_sink(
-                    ev,
-                    table,
-                    key_cols=["user_id"],
-                    version_col="ts",
-                    checkpoint=ckpt,
-                    tiebreak_cols=["event_id"],
-                )
-                .trigger(availableNow=True)
-                .start()
+        with drain(
+            lambda d: upsert_sink(
+                ev,
+                f"{d}/table",
+                key_cols=["user_id"],
+                version_col="ts",
+                checkpoint=f"{d}/checkpoint",
+                tiebreak_cols=["event_id"],
             )
-            q.awaitTermination()
-            got = read_upsert_table(spark, table)
+        ) as (d, _q):
+            got = read_upsert_table(spark, f"{d}/table")
             # ties: tiebreak_cols=["event_id"] makes the sink's
             # election mirror the oracle's ts DESC, event_id DESC even
             # on equal-µs timestamps (round-9 advisor); the oracle
@@ -310,14 +311,9 @@ def _register_streaming_upsert() -> None:
                 "event_type",
                 "value",
             )
-            # materialize off the temp files (one row per user — small)
-            # so both dirs can be removed before returning; without this
-            # every driver correctness/bench run leaks a merged copy of
-            # events to /tmp.
+            # materialize off the temp table (one row per user — small)
+            # before the drain removes it
             return pin(result, "q_streaming_upsert:result")
-        finally:
-            shutil.rmtree(table, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _register_streaming_upsert()
@@ -374,9 +370,6 @@ def _register_streaming_training_mix() -> None:
         ingestion, shards are cut from the state at publish points.
         Hash-matches the batch q_training_mix oracle; cross-micro-
         batch dedup composition is pinned in tests/test_upsert.py."""
-        import shutil
-        import tempfile
-
         from flink_streaming_example_spark.operators.pipeline import (
             split_cap_pack_report,
         )
@@ -385,33 +378,24 @@ def _register_streaming_training_mix() -> None:
         )
 
         ing = training_mix_ingest(documents_file_replay(spark, sf_dir))
-        table = tempfile.mkdtemp(prefix="mix_state_")
-        ckpt = tempfile.mkdtemp(prefix="mix_ckpt_")
-        try:
-            q = (
-                upsert_sink(
-                    ing,
-                    table,
-                    key_cols=["text_key"],
-                    version_col="neg_doc_id",
-                    checkpoint=ckpt,
-                )
-                .trigger(availableNow=True)
-                .start()
+        with drain(
+            lambda d: upsert_sink(
+                ing,
+                f"{d}/table",
+                key_cols=["text_key"],
+                version_col="neg_doc_id",
+                checkpoint=f"{d}/checkpoint",
             )
-            q.awaitTermination()
-            survivors = read_upsert_table(spark, table).select(
+        ) as (d, _q):
+            survivors = read_upsert_table(spark, f"{d}/table").select(
                 "doc_id", "lang", "n_tokens"
             )
-            # materialize off the temp state before removing it (the
-            # report is a few (lang, pack) rows — small)
+            # materialize off the temp state before the drain removes
+            # it (the report is a few (lang, pack) rows — small)
             return pin(
                 split_cap_pack_report(survivors),
                 "q_streaming_training_mix:result",
             )
-        finally:
-            shutil.rmtree(table, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _register_streaming_training_mix()
@@ -451,9 +435,6 @@ def _register_streaming_cdc() -> None:
         resurrection — the semantics tests/test_upsert.py pins with
         hand-ordered merges; here the driver checks the end-state
         against the batch latest-per-key + liveness window)."""
-        import shutil
-        import tempfile
-
         ev = events_file_replay(spark, sf_dir).select(
             "user_id",
             "event_id",
@@ -461,31 +442,22 @@ def _register_streaming_cdc() -> None:
             "event_type",
             (F.col("event_id") % 10 == 0).alias("is_delete"),
         )
-        table = tempfile.mkdtemp(prefix="cdc_q_")
-        ckpt = tempfile.mkdtemp(prefix="cdc_q_ckpt_")
-        try:
-            q = (
-                upsert_sink(
-                    ev,
-                    table,
-                    key_cols=["user_id"],
-                    version_col="ts",
-                    checkpoint=ckpt,
-                    tombstone_col="is_delete",
-                    tiebreak_cols=["event_id"],
-                )
-                .trigger(availableNow=True)
-                .start()
+        with drain(
+            lambda d: upsert_sink(
+                ev,
+                f"{d}/table",
+                key_cols=["user_id"],
+                version_col="ts",
+                checkpoint=f"{d}/checkpoint",
+                tombstone_col="is_delete",
+                tiebreak_cols=["event_id"],
             )
-            q.awaitTermination()
-            got = read_upsert_table(spark, table).select(
+        ) as (d, _q):
+            got = read_upsert_table(spark, f"{d}/table").select(
                 "user_id", "event_id", "event_type"
             )
-            # materialize off the temp table before removing it
+            # materialize off the temp table before the drain removes it
             return pin(got, "q_streaming_cdc:result")
-        finally:
-            shutil.rmtree(table, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _register_streaming_cdc()
@@ -544,16 +516,14 @@ def retract_agg_sink(
     def step(batch_df: DataFrame, _batch_id: int) -> None:
         if not batch_df.take(1):
             return
-        bucket = F.pmod(F.hash("user_id"), F.lit(_N_BUCKETS)).cast("int")
+        bucket = _bucket_of(["user_id"], _N_BUCKETS)
         affected = [
             r["b"]
             for r in batch_df.select(bucket.alias("b")).distinct().collect()
         ]
         users = batch_df.select("user_id").distinct()
         parts = []
-        if os.path.isdir(key_table) and any(
-            e.startswith("_bucket=") for e in os.listdir(key_table)
-        ):
+        if _has_buckets(key_table):
             # materialize BEFORE the merge rewrites these buckets:
             # the scan is lazy and would otherwise read post-merge
             # files (or die on the replaced ones).  One slot, so only
@@ -642,9 +612,6 @@ def _register_streaming_retract_agg() -> None:
         must SUBTRACT superseded contributions, composed on top of the
         keyed upsert table.  The driver checks the delta-maintained
         accumulator against the batch latest-per-key aggregate."""
-        import shutil
-        import tempfile
-
         ev = events_file_replay(spark, sf_dir).select(
             "user_id",
             "event_id",
@@ -655,24 +622,17 @@ def _register_streaming_retract_agg() -> None:
             .alias("vi"),
         )
         acc: dict[str, tuple[int, int]] = {}
-        table = tempfile.mkdtemp(prefix="retract_q_")
-        ckpt = tempfile.mkdtemp(prefix="retract_q_ckpt_")
-        try:
-            q = (
-                retract_agg_sink(ev, table, ckpt, acc)
-                .trigger(availableNow=True)
-                .start()
+        with drain(
+            lambda d: retract_agg_sink(
+                ev, f"{d}/table", f"{d}/checkpoint", acc
             )
-            q.awaitTermination()
+        ):
             rows = [
                 (k, int(n), int(v)) for k, (n, v) in sorted(acc.items())
             ]
-            return spark.createDataFrame(
-                rows, "event_type string, n_users long, total_micro long"
-            )
-        finally:
-            shutil.rmtree(table, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return spark.createDataFrame(
+            rows, "event_type string, n_users long, total_micro long"
+        )
 
 
 _register_streaming_retract_agg()

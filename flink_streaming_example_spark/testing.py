@@ -15,6 +15,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from flink_streaming_example_spark.operators import pinning
 from flink_streaming_example_spark.plans.registry import QuerySpec
 from flink_streaming_example_spark.sources.tables import TABLE_NAMES
 
@@ -105,14 +106,14 @@ def run_oracle_check(spark, con, spec: QuerySpec, sf_dir: str) -> CompareResult:
     try:
         spark_pdf = sdf.toPandas()
     finally:
-        # Queries that persist() intermediates (the dedup family) leave
-        # cached blocks behind; across an 80+-key parametrized session
-        # those accumulate — clear between keys, as bench.py does.
-        # (The checkpoints of cc_min_labels, cc_large_star_small_star
-        # and every other pin slot live OUTSIDE the SQL cache:
-        # operators/pinning.py keeps one per slot and frees it when the
-        # slot is re-pinned or on pinning.release_all().)
+        # Free what the key left live before the next one runs, as
+        # bench.py and perfbench do: persist()ed intermediates (the
+        # dedup family) in the SQL cache, and every pin slot's
+        # checkpoint, which lives outside that cache — without
+        # release_all() a parametrized session over every key would
+        # hold each key's slots to the end.
         spark.catalog.clearCache()
+        pinning.release_all()
     if spec.oracle is None:
         # Rows-only keys must still produce something: >0 rows and a
         # non-empty schema (a vacuous len>=0 check would green-light a

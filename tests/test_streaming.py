@@ -194,3 +194,68 @@ def test_rocksdb_state_store_provider(spark, sf_dir):
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
+
+
+def _tiny_replay(spark, path):
+    """A 30-row bounded file replay: k = id % 3, v = id."""
+    spark.range(30).select(
+        (F.col("id") % 3).alias("k"), F.col("id").alias("v")
+    ).write.parquet(str(path))
+    return spark.readStream.schema("k long, v long").parquet(str(path))
+
+
+def test_run_to_memory_drops_its_view_and_keeps_its_rows(spark, tmp_path):
+    """The memory sink's temp view is dropped before run_to_memory
+    returns, so no key's result outlives its frame; the frame's plan
+    still holds the sink, so its rows stay readable, directly and
+    through a self-join with a grouped copy of itself."""
+    from flink_streaming_example_spark.streaming.queries import run_to_memory
+
+    before = {t.name for t in spark.catalog.listTables()}
+    res = run_to_memory(_tiny_replay(spark, tmp_path / "src"), spark)
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+    want = sorted((i % 3, i) for i in range(30))
+    assert sorted(map(tuple, res.collect())) == want
+    per_k = res.groupBy(F.col("k").alias("gk")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    joined = res.join(per_k, res.k == per_k.gk).select("k", "v", "n")
+    assert sorted(map(tuple, joined.collect())) == [
+        (k, v, 10) for k, v in want
+    ]
+
+
+def test_drain_removes_its_work_dir_on_success_and_failure(
+    spark, tmp_path, monkeypatch
+):
+    """drain's one work dir (checkpoint included) is gone after a clean
+    stream and after a stream whose foreachBatch raises."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    src = _tiny_replay(spark, tmp_path / "src")
+    work = tmp_path / "work"
+    work.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work))
+
+    seen: list[int] = []
+    with streams.drain(
+        lambda d: streams.foreach_batch_sink(
+            src, lambda b, _bid: seen.append(b.count())
+        )
+    ) as (d, q):
+        assert os.path.dirname(d) == str(work)
+        assert os.path.isdir(os.path.join(d, "checkpoint"))
+        assert q.exception() is None
+    assert sum(seen) == 30
+    assert os.listdir(work) == []
+
+    def boom(_b, _bid):
+        raise RuntimeError("boom")
+
+    with pytest.raises(StreamingQueryException):
+        with streams.drain(lambda d: streams.foreach_batch_sink(src, boom)):
+            pass
+    assert os.listdir(work) == []
