@@ -1014,9 +1014,22 @@ def trigram_shingle_frame(docs: DataFrame) -> DataFrame:
     build (split + per-position concat + xxhash64 + array_distinct)
     is the classic CPU-bound expansion over a 1-task scan
     (spread_to_cores docstring; driver-confirmed 1.71x on
-    q_containment_ppjoin in PERF_r15.json, 7.94 s -> 4.64 s)."""
-    docs = spread_to_cores(docs)
-    ws = F.split(F.lower(F.col("text")), " ")
+    q_containment_ppjoin in PERF_r15.json, 7.94 s -> 4.64 s).
+
+    The word array ``ws`` is a COLUMN, selected once per document:
+    higher-order functions are interpreted (CodegenFallback), and a
+    lambda re-evaluates every expression it holds once per element,
+    so ``element_at(split(lower(text)), i)`` would re-split the
+    document three times per trigram position — O(words^2) per
+    document (3.76 s vs 2.35 s min-of-5 for q_containment_ppjoin at
+    sf0.1 on 4 vCPUs, identical shingles).  ``ws`` is referenced four
+    times below, so CollapseProject keeps the projection and the
+    lambda reads an attribute (the loop-invariant gate in
+    tests/test_plans.py)."""
+    docs = spread_to_cores(docs).select(
+        "doc_id", F.split(F.lower(F.col("text")), " ").alias("ws")
+    )
+    ws = F.col("ws")
     tri = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size(ws) - 2),

@@ -2,8 +2,9 @@
 
 Cosine similarity is computed entirely with array expressions
 (`transform`/`zip_with`/`aggregate` — SURVEY §2.7): the fold stays in
-whole-stage codegen, no Python, no UDF.  Norms are precomputed per side
-BEFORE the join so the pair computation is one dot product, not three.
+the JVM (interpreted higher-order functions), no Python, no UDF.  Norms
+are precomputed per side BEFORE the join so the pair computation is one
+dot product, not three.
 
 Determinism: ranking and output use cosine half-up-rounded at 1e-4 with
 a vec_id tiebreaker — engines may differ in the last ulp of a 64-term
@@ -754,24 +755,46 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The check emits integer invariants of the quantized vector
     (sum, L2^2, min, max) plus the 1e-6-rounded scale: integers are
     bit-deterministic across engines, so the parity check proves the
-    quantization grid itself, not a float tolerance.  All expressions
-    are codegen'd array natives (transform/aggregate) — no Python."""
+    quantization grid itself, not a float tolerance.  No Python: the
+    array work is JVM-side higher-order functions (transform /
+    aggregate), which are interpreted, not codegen'd, and re-evaluate
+    every expression their lambda holds once per element.  So ``v``,
+    ``scale`` and ``qv`` are bound as columns in turn: the quantizing
+    lambda reads ``scale`` as an attribute instead of recomputing the
+    whole vector's max per element, and the four aggregates read
+    ``qv`` instead of re-quantizing (sf0.1, min of 5 on 4 vCPUs:
+    2.43 s -> 0.25 s, same rows)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    maxabs = F.array_max(F.transform(v, F.abs))
-    scale = F.lit(127.0) / maxabs
-    qv = F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
+    scaled = emb.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    ).select(
+        "vec_id",
+        "v",
+        (F.lit(127.0) / F.array_max(F.transform("v", F.abs))).alias("scale"),
+    )
+    # ``scale`` is passed through AND read by the lambda, so the
+    # projection holding array_max is not collapsed into the lambda.
+    quant = scaled.select(
+        "vec_id",
+        "scale",
+        F.transform(
+            "v",
+            lambda x: F.floor(x * F.col("scale") + F.lit(0.5)).cast("long"),
+        ).alias("qv"),
+    )
     zero = F.lit(0).cast("long")
-    return emb.select(
+    return quant.select(
         "vec_id",
         (
-            F.floor(scale * F.lit(1000000.0) + F.lit(0.5)).cast("double")
+            F.floor(F.col("scale") * F.lit(1000000.0) + F.lit(0.5))
+            .cast("double")
             / F.lit(1000000.0)
         ).alias("scale_r"),
-        F.aggregate(qv, zero, lambda acc, x: acc + x).alias("q_sum"),
-        F.aggregate(qv, zero, lambda acc, x: acc + x * x).alias("q_norm2"),
-        F.array_max(qv).alias("q_max"),
-        F.array_min(qv).alias("q_min"),
+        F.aggregate("qv", zero, lambda acc, x: acc + x).alias("q_sum"),
+        F.aggregate("qv", zero, lambda acc, x: acc + x * x).alias("q_norm2"),
+        F.array_max("qv").alias("q_max"),
+        F.array_min("qv").alias("q_min"),
     )
 
 

@@ -83,6 +83,14 @@ frequency):
     from ONLY those doc buckets; qualifying pairs (containment >= 0.9
     of the smaller set) land in the batch's pairs partition.
 
+First batch: a state table that was never written reads as an empty
+frame the OPTIMIZER can see (``_read_state``), so Catalyst itself
+removes the prior-state legs — the stored-prefixes probe and the state
+side of every union — and there is no Python first-batch branch for
+them.  An opaque empty frame (a Python-parallelized LogicalRDD) would
+keep those legs as shuffles and sort-merge joins against nothing and
+start Python workers to scan zero rows.
+
 Exact recall across any batch slicing: the prefix property holds for
 ANY ``n_sh - t + 1`` shingles of the smaller doc (rarest-first only
 minimizes candidate volume), so a prefix computed against the df of
@@ -286,6 +294,14 @@ def _read_state(
     """Rows of ``table`` from batches STRICTLY before ``upto_batch``
     (replay safety: a failed attempt's own partial partition must
     never be read back), or an empty typed frame before first write.
+    That empty frame must stay OPTIMIZER-VISIBLE: ``where(false)``
+    makes PruneFilters turn it into an empty LocalRelation, so on a
+    first batch PropagateEmptyRelation drops every prior-state join
+    and union leg and Catalyst sizes the docs joins from statistics.
+    A bare ``createDataFrame([], schema)`` is a Python-parallelized
+    LogicalRDD of unknown size: its legs shuffle and sort-merge-join
+    the batch against nothing and start Python workers to unpickle
+    zero rows.
     Batches < current are committed — foreachBatch replays only the
     failed batch, in order — so no manifest check is needed for the
     upper bound; the LOWER bound is the table's compaction watermark
@@ -300,7 +316,7 @@ def _read_state(
     if os.path.isdir(path):
         df = spark.read.schema(schema).parquet(path)
     else:
-        df = spark.createDataFrame([], schema)
+        df = spark.createDataFrame([], schema).where(F.lit(False))
     df = df.filter(F.col("batch") < F.lit(upto_batch))
     kf = _kf(meta if meta is not None else _read_meta(state_dir), table,
              upto_batch)

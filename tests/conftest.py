@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 import duckdb
 import pytest
@@ -12,6 +13,18 @@ from flink_streaming_example_spark.testing import register_duckdb_views
 # scale so a green suite is a faithful preview.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _mkdtemp_under_basetemp(tmp_path_factory):
+    """Point ``tempfile`` at a dir under pytest's basetemp for the
+    session, so the checkpoints and shard dirs tests ``mkdtemp`` land
+    where pytest rotates them away instead of piling up in the system
+    temp dir."""
+    old = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("mkdtemp"))
+    yield
+    tempfile.tempdir = old
 
 
 @pytest.fixture(scope="session")

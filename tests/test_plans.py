@@ -295,6 +295,108 @@ def test_no_unpartitioned_window_on_unbounded_input(spark, name):
     )
 
 
+# Keys whose optimized plans legitimately keep an expensive
+# loop-invariant expression inside a lambda body, each with the reason
+# it cannot be bound as a column first.  Everything else must hoist.
+_LAMBDA_INVARIANT_KEYS: dict[str, str] = {}
+
+# Expression classes cheap enough to re-evaluate per element: an
+# attribute or literal, and scalar arithmetic, casts or size over them.
+_CHEAP_INVARIANT = {
+    "AttributeReference",
+    "Literal",
+    "NamedLambdaVariable",
+    "Add",
+    "Subtract",
+    "Multiply",
+    "Divide",
+    "IntegralDivide",
+    "Remainder",
+    "Pmod",
+    "UnaryMinus",
+    "Cast",
+    "Size",
+}
+
+
+def _jseq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _lambda_invariants(df) -> list[str]:
+    """Every maximal subexpression of a LambdaFunction body, in the
+    optimized plan, that references none of that lambda's variables
+    and is not cheap (``_CHEAP_INVARIANT``).  Higher-order functions
+    are interpreted, so such an expression is recomputed once per
+    array element although its value never changes: a lambda over a
+    document's words that holds ``split(text)`` re-splits the text
+    per word."""
+    root = df._jdf.queryExecution().optimizedPlan()
+    if "lambdafunction" not in root.toString():
+        return []
+    bad: list[str] = []
+
+    def visit(e, bound) -> tuple[bool, bool]:
+        """(references a bound variable, cheap) for ``e``; flags each
+        invariant, non-cheap child of a variant node."""
+        kind = e.getClass().getSimpleName()
+        kids = [(c, *visit(c, bound)) for c in _jseq(e.children())]
+        variant = any(v for _, v, _ in kids) or (
+            kind == "NamedLambdaVariable" and e.exprId().id() in bound
+        )
+        if variant:
+            bad.extend(c.toString() for c, v, ch in kids if not (v or ch))
+        return variant, kind in _CHEAP_INVARIANT and all(
+            ch for _, _, ch in kids
+        )
+
+    def lambdas(e):
+        if e.getClass().getSimpleName() == "LambdaFunction":
+            yield e
+        for c in _jseq(e.children()):
+            yield from lambdas(c)
+
+    def plans(node):
+        yield node
+        for c in _jseq(node.children()) + _jseq(node.subqueries()):
+            yield from plans(c)
+
+    for node in plans(root):
+        for expr in _jseq(node.expressions()):
+            for lf in lambdas(expr):
+                bound = {a.exprId().id() for a in _jseq(lf.arguments())}
+                variant, cheap = visit(lf.function(), bound)
+                if not (variant or cheap):
+                    bad.append(lf.function().toString())
+    return bad
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH), ids=sorted(_BATCH))
+def test_no_loop_invariant_work_in_lambdas(spark, name):
+    """Package-wide gate for per-element recomputation: a lambda body
+    may not hold an expression that references none of its variables
+    unless that expression is an attribute, a literal, or cheap
+    scalar arithmetic, casts or size over them.  Bind it as a column
+    first (``select(expr.alias(c))``, then ``F.col(c)`` inside the
+    lambda) so it is computed once per row.  Pinned keys are checked
+    on their pre-pin frames too, since the checkpoint hides them from
+    the final plan."""
+    df = _df(spark, name)
+    bad = [
+        b for f in (df, *_PRE_PIN_FRAMES[name]) for b in _lambda_invariants(f)
+    ]
+    if name in _LAMBDA_INVARIANT_KEYS:
+        assert bad, (
+            f"{name}: allowlisted but no loop-invariant lambda work "
+            "remains — remove it from _LAMBDA_INVARIANT_KEYS"
+        )
+        return
+    assert not bad, (
+        f"{name}: loop-invariant work inside a lambda body {bad}; bind "
+        "it as a column first or justify it in _LAMBDA_INVARIANT_KEYS"
+    )
+
+
 def test_lpa_argmax_is_aggregate_not_window(spark):
     """q_label_propagation's per-round argmax must compile to
     partial+final aggregate pairs (max_by), NEVER a per-node

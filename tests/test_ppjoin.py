@@ -262,6 +262,70 @@ def test_streaming_ppjoin_reads_each_state_table_once_per_batch(
     assert sorted(calls) == ["dfreq", "docs", "postings", "prefixes"], calls
 
 
+def test_streaming_ppjoin_first_batch_has_no_prior_state_legs(
+    spark, tmp_path, monkeypatch
+):
+    """Before its first write a state table must read as an empty
+    frame the OPTIMIZER can see: an empty LocalRelation, not a
+    Python-parallelized LogicalRDD of unknown size.  Then a first
+    batch's pairs plan carries no prior-state leg at all — Catalyst
+    drops the stored-prefixes probe and the state side of every
+    union — instead of shuffling and joining the batch against
+    nothing and starting Python workers to scan zero rows."""
+    from flink_streaming_example_spark.sources.tables import load_table
+    from flink_streaming_example_spark.streaming import ppjoin as pp
+    from tests.test_plans import _walk_jvm_plan
+
+    never_written = str(tmp_path / "never_written")
+    for table in pp._SCHEMAS:
+        plan = (
+            pp._read_state(spark, never_written, table, 0, keep_batch=True)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+        )
+        assert plan.getClass().getSimpleName() == "LocalRelation", (
+            f"{table}: empty state is not an empty LocalRelation\n{plan}"
+        )
+        assert plan.data().isEmpty(), f"{table}: {plan}"
+        assert "LogicalRDD" not in plan.toString(), f"{table}: {plan}"
+
+    fixture = tmp_path / "fx"
+    fixture.mkdir()
+    _write_documents(_crafted_texts(), str(fixture))
+    written: dict = {}
+    real = pp._write_state
+
+    def capturing(df, state_dir, table, batch_id):
+        written[table] = df
+        real(df, state_dir, table, batch_id)
+
+    monkeypatch.setattr(pp, "_write_state", capturing)
+    docs = load_table(spark, str(fixture), "documents").select(
+        "doc_id", "text"
+    )
+    pp.ppjoin_merge_batch(docs, str(tmp_path / "state"), 0)
+    plan = written[pp._PAIRS]._jdf.queryExecution().optimizedPlan()
+    nodes = list(_walk_jvm_plan(plan))
+    # every state read carries the `batch` partition column; the
+    # batch's own frames (the pins) do not
+    prior = [
+        n.nodeName()
+        for n in nodes
+        if n.children().isEmpty()
+        and (
+            n.getClass().getSimpleName() == "LocalRelation"
+            or any(
+                n.output().apply(i).name() == "batch"
+                for i in range(n.output().size())
+            )
+        )
+    ]
+    assert not prior, f"first-batch pairs plan reads prior state:\n{plan}"
+    # new prefixes x batch postings, then the two docs lookups
+    joins = [n for n in nodes if n.getClass().getSimpleName() == "Join"]
+    assert len(joins) == 3, f"expected 3 joins, got {len(joins)}:\n{plan}"
+
+
 def test_streaming_ppjoin_df_fold_never_aggregates_postings(
     spark, tmp_path
 ):
